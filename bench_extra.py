@@ -9,6 +9,11 @@ Modes:
   python bench_extra.py --queries a,b   # restrict to a subset
   python bench_extra.py --passes 3      # number of passes (default 2)
 
+Besides the per-query walls, each pass reports its summed wall, the classes
+Janino compiled during it and their compile milliseconds (Spark's
+CodegenMetrics / CodeGenerator.compileTime), so a warm pass that still
+recompiles generated code shows up.
+
 Respects $SPARK_GRAFT_SF_DIR and $SPARK_GRAFT_CPUS exactly like bench.py.
 """
 
@@ -54,9 +59,14 @@ def main() -> None:
                 f.write(txt)
             print(f"explained {name}", file=sys.stderr)
 
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     times: dict[str, float] = {}
     samples: dict[str, list] = {n: [] for n in names}
+    passes = []
     for _ in range(args.passes):
+        n0, ns0, w0 = compiles.getCount(), codegen.compileTime(), time.monotonic()
         for name in names:
             spark.sparkContext.setJobDescription(f"bench_extra: {name}")
             t0 = time.monotonic()
@@ -66,12 +76,20 @@ def main() -> None:
             samples[name].append(wall)
             times[name] = min(times.get(name, wall), wall)
             spark.sparkContext.setJobDescription(None)
+        passes.append(
+            {
+                "wall_s": round(time.monotonic() - w0, 3),
+                "compiles": compiles.getCount() - n0,
+                "compile_ms": round((codegen.compileTime() - ns0) / 1e6, 1),
+            }
+        )
     print(
         json.dumps(
             {
                 "value": round(sum(times.values()), 3),
                 "queries": times,
                 "samples": samples,
+                "passes": passes,
                 "sf": SF_DIR,
             }
         )

@@ -60,11 +60,12 @@ def has_duplicate_id_rows(ids: DataFrame) -> bool:
     a hash collision can only create a false "duplicates exist"
     (triggering a harmless unneeded dedup), never miss a real duplicate.
     """
+    # no limit(1): Spark names a limit's generated state from a process-wide
+    # counter, so every probe would compile fresh classes on every run
     return (
         ids.groupBy(F.xxhash64("content_sha", "file_id").alias("__k"))
         .count()
         .where(F.col("count") > 1)
-        .limit(1)
         .count()
         > 0
     )

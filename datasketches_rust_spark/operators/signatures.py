@@ -2,7 +2,7 @@
 
 The reference's build path (`/root/reference/datasketches/src/thetafamily/
 theta/sketch.rs:128-130`: update → hash → theta-screen → k-min table) runs
-here as one ``mapInPandas`` pass: each Arrow batch of files is tokenized,
+here as one ``mapInArrow`` pass: each Arrow batch of files is tokenized,
 shingled, hashed and reduced to
 
 - ``minhash_kmv``: sorted k smallest distinct 63-bit shingle hashes — the
@@ -22,15 +22,14 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..config import PipelineConfig
 from ..sigkit.kmv import kmv_signatures
 from ..sigkit.oph import band_hashes, oph_minhashes
 from ..sigkit.simhash import simhash64
-from ..sigkit.tokenize import shingle_hashes, shingle_hashes_buf
+from ..sigkit.tokenize import shingle_hashes_buf
 
 # content_sha is BINARY(32), not the 64-char hex string: it is the join /
 # shuffle / group key of every downstream stage, and halving the key bytes
@@ -48,33 +47,6 @@ SIGNATURE_SCHEMA = (
     "n_shingles long, minhash_kmv binary, theta64 long, "
     "simhash64 long, bands array<long>, cfg_hash long"
 )
-
-
-def signature_batch(pdf: pd.DataFrame, cfg: PipelineConfig) -> pd.DataFrame:
-    """Pure-pandas signature kernel for one Arrow batch (testable solo)."""
-    texts = pdf["content"].tolist()
-    vals, offs = shingle_hashes(texts, cfg.shingle_width, cfg.seed)
-    sig_vals, sig_offs, theta, n_distinct = kmv_signatures(vals, offs, cfg.kmv_k)
-    sim = simhash64(vals, offs)
-    mh = oph_minhashes(vals, offs, cfg.num_perm, cfg.seed)
-    bh = band_hashes(mh, cfg.num_bands, cfg.band_rows, cfg.seed)
-
-    sig_le = sig_vals.astype("<u8")
-    nonempty = n_distinct > 0
-    return pd.DataFrame(
-        {
-            "file_id": pdf["file_id"].to_numpy(),
-            "content_sha": pdf["content_sha"].to_numpy(),
-            "n_shingles": n_distinct,
-            "minhash_kmv": [
-                sig_le[sig_offs[i]: sig_offs[i + 1]].tobytes() for i in range(len(pdf))
-            ],
-            "theta64": theta,
-            "simhash64": sim,
-            "bands": [bh[i] if nonempty[i] else np.empty(0, np.int64) for i in range(len(pdf))],
-            "cfg_hash": np.full(len(pdf), cfg.cfg_hash(), dtype=np.int64),
-        }
-    )
 
 
 def _arrow_string_to_buf(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -152,6 +124,11 @@ def signature_record_batch(rb: pa.RecordBatch, cfg: PipelineConfig) -> pa.Record
     )
 
 
+def file_id_col() -> Column:
+    """The engine's file id: hex sha256 of (repo, path, commit), NUL-joined."""
+    return F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256)
+
+
 def compute_signatures(corpus: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """corpus(repo, path, commit, lang, content) → signature table.
 
@@ -161,7 +138,7 @@ def compute_signatures(corpus: DataFrame, cfg: PipelineConfig) -> DataFrame:
     pandas/str materialization).
     """
     with_ids = corpus.select(
-        F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256).alias("file_id"),
+        file_id_col().alias("file_id"),
         F.unhex(F.sha2(F.col("content"), 256)).alias("content_sha"),
         "content",
     )

@@ -23,8 +23,5 @@ def fan_out_small_scan(df: DataFrame, min_partitions: int | None = None) -> Data
     """
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:  # planning-only probe; never fail the caller's plan
-        return df
+    n = df.rdd.getNumPartitions()
     return df.repartition(target) if n < target else df

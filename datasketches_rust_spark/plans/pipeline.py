@@ -17,8 +17,11 @@ counts (map-then-merge accounting, FIXTURES.md F5).
 
 from __future__ import annotations
 
+import logging
 import os
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig
@@ -31,9 +34,11 @@ from ..operators.lsh import (
     has_duplicate_id_rows,
     rep_payload,
 )
-from ..operators.signatures import compute_signatures
+from ..operators.signatures import compute_signatures, file_id_col
 from ..operators.substring import containment_pairs
 from ..operators.verify import verify_pairs
+
+log = logging.getLogger(__name__)
 
 
 class DedupPipeline:
@@ -75,12 +80,17 @@ class DedupPipeline:
         if os.path.exists(os.path.join(path, "_SUCCESS")):
             try:
                 meta = self.spark.read.parquet(self._meta_path(name)).collect()
-                if meta and meta[0]["fingerprint"] == fp:
-                    df = self.spark.read.parquet(path)
-                    self.metrics.append((name, df.count(), fp, True))
-                    return df, fp
-            except Exception:
-                pass  # missing/corrupt meta → recompute
+                found = meta[0]["fingerprint"] if meta else None
+                reason = None if found == fp else f"fingerprint {found!r}, expected {fp!r}"
+            except (AnalysisException, Py4JJavaError, ValueError) as e:
+                # missing meta: PATH_NOT_FOUND; corrupt file: the job reading
+                # its footer fails; no fingerprint column: the Row lookup
+                reason = f"unreadable {self._meta_path(name)} ({type(e).__name__})"
+            if reason is None:
+                df = self.spark.read.parquet(path)
+                self.metrics.append((name, df.count(), fp, True))
+                return df, fp
+            log.warning("stage %s: recomputing checkpoint, %s", name, reason)
         df = compute()
         df.write.mode("overwrite").parquet(path)
         self.spark.createDataFrame(
@@ -99,15 +109,6 @@ class DedupPipeline:
         self.metrics = []
 
     # ------------------------------------------------------------ stages
-
-    @staticmethod
-    def file_ids(corpus: DataFrame) -> DataFrame:
-        """(file_id, content_sha BINARY) — JVM-only (sha2), cheap to
-        recompute; content_sha matches the signature table's binary key."""
-        return corpus.select(
-            F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256).alias("file_id"),
-            F.unhex(F.sha2(F.col("content"), 256)).alias("content_sha"),
-        )
 
     def _dedup_stages(self, corpus: DataFrame, input_fp: str):
         """Shared stage chain up to verification.
@@ -158,10 +159,15 @@ class DedupPipeline:
             pool = ThreadPoolExecutor(max_workers=1)
             probe_fut = pool.submit(has_duplicate_id_rows, ids)
             pool.shutdown(wait=False)
-        keys, fp2 = self._stage("rep_keys", fp1, lambda: exact_rep_keys(ids))
-        broadcast = self.cfg.broadcast_rep_payload
-        if broadcast is None:
-            broadcast = self._stage_rows("rep_keys", keys) <= self.cfg.broadcast_key_limit
+        try:
+            keys, fp2 = self._stage("rep_keys", fp1, lambda: exact_rep_keys(ids))
+            broadcast = self.cfg.broadcast_rep_payload
+            if broadcast is None:
+                broadcast = self._stage_rows("rep_keys", keys) <= self.cfg.broadcast_key_limit
+        finally:
+            # read the probe on every path, so its error surfaces even when
+            # the shuffle fallback (which needs no probe) is chosen
+            has_dups = probe_fut.result() if probe_fut is not None else None
         # downstream stages see the RESOLVED decision (verify's cand-sha
         # semi-join pushdown gates on the same broadcast-capacity premise)
         rcfg = self.cfg.with_(broadcast_rep_payload=broadcast)
@@ -172,15 +178,9 @@ class DedupPipeline:
 
             def payload() -> DataFrame:
                 if "p" not in memo:
-                    has_dups = (
-                        probe_fut.result()
-                        if probe_fut is not None
-                        else has_duplicate_id_rows(ids)
-                    )
+                    dups = has_dups if has_dups is not None else has_duplicate_id_rows(ids)
                     memo["p"] = (
-                        sigs.dropDuplicates(["content_sha", "file_id"])
-                        if has_dups
-                        else sigs
+                        sigs.dropDuplicates(["content_sha", "file_id"]) if dups else sigs
                     )
                 return memo["p"]
 
@@ -273,10 +273,7 @@ class DedupPipeline:
             "signatures", input_fp, lambda: compute_signatures(corpus, self.cfg)
         )
         ids, _ = self._stage("ids", fp1, lambda: sigs.select("file_id", "content_sha"))
-        docs = corpus.select(
-            F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256).alias("file_id"),
-            F.col("content"),
-        )
+        docs = corpus.select(file_id_col().alias("file_id"), F.col("content"))
         return containment_pairs(
             docs,
             id_col="file_id",

@@ -45,6 +45,13 @@ def get_spark(
         # signature kernels work on whole-file strings; keep Arrow batches
         # bounded so a batch of 200KB files stays well under executor memory
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        # Spark's codegen cache holds 100 classes by default; one pipeline
+        # run generates ~133 and one pass of the 12 headline queries ~272,
+        # so every class was evicted before reuse and Janino recompiled it
+        # on the driver each run. One pipeline run plus all 33 queries()
+        # compile 572 distinct classes (unbounded cache, local[4]); 2048
+        # holds that set with headroom. Static conf: must be set here.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )

@@ -8,10 +8,9 @@ stage metrics — the smallest honest end-to-end exercise of the engine.
 
 import sys
 
-from pyspark.sql import functions as F
-
 from datasketches_rust_spark.config import PipelineConfig
 from datasketches_rust_spark.corpus.generator import corpus_spark, truth_pairs
+from datasketches_rust_spark.operators.signatures import file_id_col
 from datasketches_rust_spark.plans.pipeline import DedupPipeline
 from datasketches_rust_spark.plans.session import get_spark
 
@@ -24,10 +23,7 @@ def main(n_files: int = 5000) -> None:
     pipe = DedupPipeline(spark, cfg)
     clusters = pipe.run(corpus.drop("file_seq"))
 
-    ids = corpus.select(
-        F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256).alias("file_id"),
-        "file_seq",
-    )
+    ids = corpus.select(file_id_col().alias("file_id"), "file_seq")
     pdf = clusters.join(ids, "file_id").toPandas()
 
     truth = truth_pairs(42, n_files)
