@@ -9,10 +9,11 @@ Modes:
   python bench_extra.py --queries a,b   # restrict to a subset
   python bench_extra.py --passes 3      # number of passes (default 2)
 
-Besides the per-query walls, each pass reports its summed wall, the classes
-Janino compiled during it and their compile milliseconds (Spark's
-CodegenMetrics / CodeGenerator.compileTime), so a warm pass that still
-recompiles generated code shows up.
+Besides the per-query walls, each pass reports its summed wall, the Spark
+jobs it ran (each pass is its own job group), and the classes Janino
+compiled during it with their compile milliseconds (Spark's CodegenMetrics /
+CodeGenerator.compileTime), so a warm pass that still recompiles generated
+code, or a change in how many jobs a query plans, shows up.
 
 Respects $SPARK_GRAFT_SF_DIR and $SPARK_GRAFT_CPUS exactly like bench.py.
 """
@@ -65,20 +66,24 @@ def main() -> None:
     times: dict[str, float] = {}
     samples: dict[str, list] = {n: [] for n in names}
     passes = []
-    for _ in range(args.passes):
+    sc = spark.sparkContext
+    for i in range(args.passes):
+        group = f"bench_extra.pass{i}"
+        sc.setJobGroup(group, group)
         n0, ns0, w0 = compiles.getCount(), codegen.compileTime(), time.monotonic()
         for name in names:
-            spark.sparkContext.setJobDescription(f"bench_extra: {name}")
+            sc.setJobDescription(f"bench_extra: {name}")
             t0 = time.monotonic()
             df = qs[name](spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
             wall = round(time.monotonic() - t0, 3)
             samples[name].append(wall)
             times[name] = min(times.get(name, wall), wall)
-            spark.sparkContext.setJobDescription(None)
+            sc.setJobDescription(None)
         passes.append(
             {
                 "wall_s": round(time.monotonic() - w0, 3),
+                "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
                 "compiles": compiles.getCount() - n0,
                 "compile_ms": round((codegen.compileTime() - ns0) / 1e6, 1),
             }

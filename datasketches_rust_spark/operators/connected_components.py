@@ -1,28 +1,44 @@
-"""Stage 4 — connected components via alternating large-star / small-star.
+"""Stage 4 — connected components, on the driver or distributed.
 
-The two-phase DataFrame-join formulation of Kiveris et al., "Connected
-Components in MapReduce and Beyond" (SOCC'14): every iteration is a
-bounded number of shuffles on node ids, converges in O(log^2 n) rounds
-(2-4 rounds in practice for near-dup clusters, whose diameter is tiny),
-and never materializes a component in one task — so it survives clusters
-of any size, unlike collect-based CC.
+Two implementations with one contract, ``edges(src, dst) → assignments(node,
+component)`` with component = min node id in the component:
+
+- ``components_on_driver``: one Arrow collect of the edge list, a numpy
+  hook-to-min + pointer-jumping labeler (``min_labels``), and the
+  assignment table handed back as a local relation. One Spark job (the
+  collect), whatever the graph's diameter.
+- ``connected_components``: the two-phase large-star / small-star
+  DataFrame-join formulation of Kiveris et al., "Connected Components in
+  MapReduce and Beyond" (SOCC'14). Every iteration is a bounded number of
+  shuffles on node ids, it converges in O(log^2 n) rounds (2-4 for
+  near-dup clusters, whose diameter is tiny), and no component is ever
+  held in one task or on the driver — so it serves graphs of any size.
+
+``DedupPipeline.run`` picks the driver path when the verified-pair count
+(an upper bound on the edge count) fits the driver's row budget,
+``PipelineConfig.broadcast_key_limit``; the measured numbers are next to
+that branch.
 
 Node ids are 32-byte binary content_shas: globally unique at any corpus
 scale (no 64-bit-collision risk at 10^12 files) and the component minimum
 under byte-wise binary ordering equals the minimum of the hex rendering —
-exactly FIXTURES.md F4's cluster_id = min content_sha.
+exactly FIXTURES.md F4's cluster_id = min content_sha. numpy's fixed-width
+``S32`` ordering is the same unsigned byte-wise order, so the smallest
+index after ``np.unique`` is the smallest sha.
 
-Each iteration ends with a lineage cut (localCheckpoint, or parquet
-round-trip when a checkpoint dir is provided) — iterative plans otherwise
-grow Catalyst lineage exponentially. Convergence is detected by an
-order-insensitive fingerprint (count + sum of pair hashes) that rides the
-materialization action itself via ``DataFrame.observe`` — no separate
+In the star loop, each iteration ends with a lineage cut (localCheckpoint,
+or parquet round-trip when a checkpoint dir is provided) — iterative plans
+otherwise grow Catalyst lineage exponentially. Convergence is detected by
+an order-insensitive fingerprint (count + sum of pair hashes) that rides
+the materialization action itself via ``DataFrame.observe`` — no separate
 fingerprint job per iteration (the loop is scheduling-overhead-bound at
 high core counts, so jobs per iteration matter more than bytes).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, functions as F
 
 
@@ -123,3 +139,59 @@ def connected_components(
     return assign.unionByName(roots).groupBy("node").agg(
         F.min("component").alias("component")
     )
+
+
+def min_labels(src: np.ndarray, dst: np.ndarray, n: int) -> np.ndarray:
+    """Component labels of the graph on nodes 0..n-1 with edges
+    (src[i], dst[i]): label[v] = the smallest node connected to v.
+
+    Each round hooks every root to the smallest root its cross edges reach
+    (``np.minimum.at``), then jumps pointers (``label = label[label]``)
+    until every node points at a root. A root only ever points at a
+    smaller node of its component, so once no edge joins two labels, each
+    component's label is its smallest node.
+    """
+    label = np.arange(n)
+    while True:
+        a, b = label[src], label[dst]
+        live = a != b
+        if not live.any():
+            return label
+        src, dst, a, b = src[live], dst[live], a[live], b[live]
+        np.minimum.at(label, np.maximum(a, b), np.minimum(a, b))
+        while True:
+            up = label[label]
+            if np.array_equal(up, label):
+                break
+            label = up
+
+
+def _sha_values(col: pa.ChunkedArray) -> np.ndarray:
+    """A binary column of 32-byte ids as a fixed-width ``S32`` numpy array
+    over the Arrow buffer (the cast rejects any other width)."""
+    arr = col.cast(pa.binary(32)).combine_chunks()
+    # an empty column may carry no data buffer at all
+    buf = arr.buffers()[1] or b""
+    return np.frombuffer(buf, "S32", count=len(arr), offset=32 * arr.offset)
+
+
+def _binary(values: np.ndarray) -> pa.Array:
+    """``S32`` values back to an Arrow binary column, without per-value
+    Python objects."""
+    fixed = pa.FixedSizeBinaryArray.from_buffers(
+        pa.binary(32), len(values), [None, pa.py_buffer(values)]
+    )
+    return fixed.cast(pa.binary())
+
+
+def components_on_driver(edges: DataFrame) -> DataFrame:
+    """``connected_components`` for an edge list that fits on the driver:
+    one ``toArrow`` collect, ``min_labels`` over the np.unique numbering
+    (index order = byte order, so the smallest index is the min id), and
+    the (node, component) table back as a Spark relation. Same output."""
+    t = edges.select("src", "dst").where(F.col("src") != F.col("dst")).toArrow()
+    src, dst = _sha_values(t.column("src")), _sha_values(t.column("dst"))
+    nodes, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    label = min_labels(idx[: len(src)], idx[len(src) :], len(nodes))
+    table = pa.table({"node": _binary(nodes), "component": _binary(nodes[label])})
+    return edges.sparkSession.createDataFrame(table)

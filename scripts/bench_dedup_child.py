@@ -84,82 +84,13 @@ def main(corpus_path: str, cpus: int) -> None:
     # interpreter startup to nothing; at bench scale it would skew the ratio
     corpus.select("repo").mapInPandas(lambda it: it, "repo string").count()
 
-    stage_walls = {}
     t0 = time.monotonic()
-    if os.environ.get("SPARK_GRAFT_STAGE_WALLS") == "1":
-        # diagnostic mode: eager-checkpoint each stage and time it — finds
-        # which stage stops scaling; not the official measurement (eager
-        # materialization breaks cross-stage pipelining)
-        from pyspark.sql import functions as F
-
-        from datasketches_rust_spark.operators.connected_components import (
-            connected_components,
-        )
-        from datasketches_rust_spark.operators.lsh import (
-            candidate_pairs,
-            exact_rep_keys,
-            has_duplicate_id_rows,
-            rep_payload,
-        )
-        from datasketches_rust_spark.operators.signatures import compute_signatures
-        from datasketches_rust_spark.operators.verify import verify_pairs
-
-        def timed(name, df):
-            t = time.monotonic()
-            out = df.localCheckpoint(eager=True)
-            stage_walls[name] = round(time.monotonic() - t, 2)
-            return out
-
-        sigs = timed("signatures", compute_signatures(corpus, cfg))
-        ids = timed("ids", sigs.select("file_id", "content_sha"))
-        keys = timed("rep_keys", exact_rep_keys(ids))
-        t = time.monotonic()
-        payload = (
-            sigs.dropDuplicates(["content_sha", "file_id"])
-            if has_duplicate_id_rows(ids)
-            else sigs
-        )
-        stage_walls["dup_probe"] = round(time.monotonic() - t, 2)
-        # the broadcast payload attach is a zero-exchange scan, so its cost
-        # lands inside the consumer stages' walls (candidates/verify)
-        cands = timed(
-            "candidates", candidate_pairs(rep_payload(payload, keys, ["bands"]), cfg)
-        )
-        verified = timed(
-            "verify",
-            verify_pairs(
-                cands,
-                rep_payload(payload, keys, ["n_shingles", "minhash_kmv", "theta64"]),
-                cfg,
-            ),
-        )
-        edges = verified.where("accepted").select(
-            F.col("sha_a").alias("src"), F.col("sha_b").alias("dst")
-        )
-        t = time.monotonic()
-        assign = connected_components(edges)
-        clusters = (
-            ids
-            .join(assign.withColumnRenamed("node", "content_sha"), "content_sha", "left")
-            .select(
-                "file_id",
-                "content_sha",
-                F.coalesce("component", "content_sha").alias("cluster_id"),
-            )
-        )
-        n_rows = clusters.count()
-        stage_walls["cc+assign"] = round(time.monotonic() - t, 2)
-    else:
-        pipe = DedupPipeline(spark, cfg)
-        clusters = pipe.run(corpus)
-        n_rows = clusters.count()
+    clusters = DedupPipeline(spark, cfg).run(corpus)
+    n_rows = clusters.count()
     wall = time.monotonic() - t0
     n_clusters = clusters.select("cluster_id").distinct().count()
 
-    out = {"wall": wall, "files": n_files, "rows": n_rows, "clusters": n_clusters}
-    if stage_walls:
-        out["stage_walls"] = stage_walls
-    print(json.dumps(out))
+    print(json.dumps({"wall": wall, "files": n_files, "rows": n_rows, "clusters": n_clusters}))
     spark.stop()
     shutil.rmtree(f"/dev/shm/spark-bench-{cpus}", ignore_errors=True)
 

@@ -1,5 +1,7 @@
 """Spark-level operator tests on small in-memory data."""
 
+import hashlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -178,40 +180,6 @@ def test_theta_bounds_bracket_truth(spark):
     assert row["lower"] == row["estimate"] == row["upper"] == 500.0
 
 
-def test_multimodal_plumbing(spark):
-    import pytest as _pytest
-
-    from datasketches_rust_spark.operators.multimodal import (
-        attach_media_meta,
-        extract_features,
-        frame_sample_plan,
-    )
-
-    rows = [
-        (1, bytes.fromhex("89504e47") + b"fakepng" * 50),
-        (2, bytes.fromhex("ffd8ffe0") + b"fakejpg" * 50),
-        (3, bytes.fromhex("89504e47") + b"fakepng" * 50),  # dup of 1
-        (4, b""),
-    ]
-    df = spark.createDataFrame(rows, "asset_id long, blob binary")
-    meta = {r["asset_id"]: r["media_meta"] for r in attach_media_meta(df, "blob").collect()}
-    assert meta[1]["format"] == "png" and meta[2]["format"] == "jpeg"
-    assert meta[1]["n_bytes"] == 4 + 7 * 50
-
-    feats = {r["asset_id"]: r["features"] for r in extract_features(df, "blob", "asset_id").collect()}
-    assert feats[1] == feats[3]  # deterministic → identical bytes dedup by feature
-    assert feats[1] != feats[2]
-    assert len(feats[1]) == 16 and abs(sum(feats[1]) - 1.0) < 1e-9
-
-    with _pytest.raises(Exception, match="NotImplementedError|codec"):
-        extract_features(df, "blob", "asset_id", decoder="stub").collect()
-
-    plan = frame_sample_plan(
-        spark.createDataFrame([(1, 300)], "vid long, n_frames long"), "vid", "n_frames"
-    ).collect()[0]
-    assert plan["frame_indices"] == [0, 30, 60, 90, 120, 150, 180, 210]
-
-
 def test_embedding_dup_pairs(spark):
     rng = np.random.default_rng(17)
     base = rng.standard_normal((50, 64)).astype(np.float32)
@@ -235,19 +203,30 @@ def test_scan_column_pruning(spark):
     assert "source" not in read_schema and "n_chars" not in read_schema
 
 
-def test_connected_components_shapes(spark):
-    """Path graph (worst diameter), disjoint cliques, isolated roots."""
-    from datasketches_rust_spark.operators.connected_components import (
-        connected_components,
-    )
+@pytest.mark.parametrize("impl", ["star_loop", "on_driver"])
+def test_connected_components_shapes(spark, impl):
+    """Path graph (worst diameter), a clique and an empty edge set, on both
+    implementations; ids are 32-byte binaries like the pipeline's
+    content_shas, and component = the byte-wise min id."""
+    from datasketches_rust_spark.operators import connected_components as cc
 
-    chain = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(60)]
-    clique = [(f"c{i}", f"c{j}") for i in range(5) for j in range(i + 1, 5)]
-    edges = spark.createDataFrame(chain + clique, "src string, dst string")
-    got = {r["node"]: r["component"] for r in connected_components(edges).collect()}
-    assert {got[f"n{i:03d}"] for i in range(61)} == {"n000"}
-    assert {got[f"c{i}"] for i in range(5)} == {"c0"}
+    run = {"star_loop": cc.connected_components, "on_driver": cc.components_on_driver}[impl]
+
+    def sha(name):
+        return hashlib.sha256(name.encode()).digest()
+
+    path = [sha(f"n{i:03d}") for i in range(61)]
+    clique = [sha(f"c{i}") for i in range(5)]
+    pairs = list(zip(path, path[1:]))
+    pairs += [(clique[i], clique[j]) for i in range(5) for j in range(i + 1, 5)]
+    edges = spark.createDataFrame(pairs, "src binary, dst binary")
+    got = {bytes(r["node"]): bytes(r["component"]) for r in run(edges).collect()}
+    assert {got[n] for n in path} == {min(path)}
+    assert {got[n] for n in clique} == {min(clique)}
     assert len(got) == 66
+
+    empty = spark.createDataFrame([], "src binary, dst binary")
+    assert run(empty).collect() == []
 
 
 def test_ngram_jaccard_pairs_small(spark):

@@ -9,6 +9,7 @@ Correctness anchors (SURVEY.md §5 carry-over):
 """
 
 import logging
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -240,23 +241,36 @@ def test_rep_payload_auto_mode_resolves_from_key_count(spark, corpus, monkeypatc
     rep-key count (round-4 ADVICE #3: no static knob to forget): a limit
     below the key count forces the shuffle fallback, a comfortable limit
     keeps the broadcast path — both with identical clusters; a failing
-    duplicate probe fails the run on either path."""
+    duplicate probe fails the run on either path. The same limit picks
+    the connected-components path from the verified row count: the
+    default clusters on the driver, a limit of 1 runs the star loop."""
+    import datasketches_rust_spark.plans.pipeline as P
+
+    calls = []
+    for name in ("components_on_driver", "connected_components"):
+
+        def spy(edges, *args, _name=name, _orig=getattr(P, name), **kw):
+            calls.append(_name)
+            return _orig(edges, *args, **kw)
+
+        monkeypatch.setattr(P, name, spy)
+
     a = (
         DedupPipeline(spark, CFG.with_(broadcast_rep_payload=None))
         .run(corpus.drop("file_seq"))
         .orderBy("file_id")
         .toPandas()
     )
+    assert calls == ["components_on_driver"]
     forced_fallback = DedupPipeline(
         spark, CFG.with_(broadcast_rep_payload=None, broadcast_key_limit=1)
     )
     b = forced_fallback.run(corpus.drop("file_seq")).orderBy("file_id").toPandas()
+    assert calls == ["components_on_driver", "connected_components"]
     pd.testing.assert_frame_equal(a, b)
 
     # the prefetched duplicate probe is read even when the fallback (which
     # needs no probe) is chosen: its error must not be lost
-    import datasketches_rust_spark.plans.pipeline as P
-
     def failing_probe(ids):
         raise RuntimeError("probe failed")
 
@@ -267,29 +281,94 @@ def test_rep_payload_auto_mode_resolves_from_key_count(spark, corpus, monkeypatc
         ).run(corpus.drop("file_seq"))
 
 
-def test_corrupt_stage_meta_recomputes_that_stage(spark, corpus, tmp_path, caplog):
-    """A corrupt ``<stage>__meta`` parquet makes resume recompute that
-    stage (logging which and why); stages upstream resume, and the
-    clusters are identical."""
-    ckpt = str(tmp_path / "ckpt")
-    c = corpus.drop("file_seq")
-    out1 = DedupPipeline(spark, CFG, checkpoint_dir=ckpt).run(c).orderBy("file_id").toPandas()
-    parts = list((tmp_path / "ckpt" / "candidates__meta").glob("part-*"))
-    assert parts
-    for f in parts:
-        f.write_bytes(b"not parquet")
+@pytest.fixture(scope="module")
+def checkpointed(spark, corpus, tmp_path_factory):
+    """One complete durable-checkpoint run: (its checkpoint dir, its
+    clusters). Tests that break a stage work on a copy of the dir."""
+    ckpt = tmp_path_factory.mktemp("ckpt") / "ckpt"
+    out = (
+        DedupPipeline(spark, CFG, checkpoint_dir=str(ckpt))
+        .run(corpus.drop("file_seq"))
+        .orderBy("file_id")
+        .toPandas()
+    )
+    return ckpt, out
 
+
+def _rerun_broken_candidates(spark, corpus, checkpointed, tmp_path, caplog, breaker):
+    """Copy the checkpoint, break its candidates stage with ``breaker``,
+    resume, and check that exactly that stage recomputed and that the
+    clusters are unchanged; returns the warnings naming candidates."""
+    src, out1 = checkpointed
+    ckpt = tmp_path / "ckpt"
+    shutil.copytree(src, ckpt)
+    breaker(ckpt)
     with caplog.at_level(logging.WARNING, logger="datasketches_rust_spark.plans.pipeline"):
-        out2 = DedupPipeline(spark, CFG, checkpoint_dir=ckpt).run(c).orderBy("file_id").toPandas()
+        out2 = (
+            DedupPipeline(spark, CFG, checkpoint_dir=str(ckpt))
+            .run(corpus.drop("file_seq"))
+            .orderBy("file_id")
+            .toPandas()
+        )
     pd.testing.assert_frame_equal(out1, out2)
 
     m = spark.read.parquet(f"{ckpt}/_metrics").toPandas()
     assert m[m.stage == "signatures"].reused.sum() == 1
     assert len(m[m.stage == "candidates"]) == 2
     assert not m[m.stage == "candidates"].reused.any()
-    assert [r.getMessage() for r in caplog.records if "candidates" in r.getMessage()] == [
+    return [r.getMessage() for r in caplog.records if "candidates" in r.getMessage()]
+
+
+def _overwrite_parts(d):
+    parts = list(d.glob("part-*"))
+    assert parts
+    for f in parts:
+        f.write_bytes(b"not parquet")
+
+
+def test_corrupt_stage_meta_recomputes_that_stage(spark, corpus, checkpointed, tmp_path, caplog):
+    """A corrupt ``<stage>__meta`` parquet makes resume recompute that
+    stage (logging which and why); stages upstream resume, and the
+    clusters are identical."""
+    logs = _rerun_broken_candidates(
+        spark, corpus, checkpointed, tmp_path, caplog,
+        lambda ckpt: _overwrite_parts(ckpt / "candidates__meta"),
+    )
+    ckpt = tmp_path / "ckpt"
+    assert logs == [
         f"stage candidates: recomputing checkpoint, unreadable {ckpt}/candidates__meta (Py4JJavaError)"
     ]
+
+
+# how to break the candidates checkpoint -> the reason resume must log
+BREAKERS = {
+    # the stage's own parquet is garbage while its meta still matches
+    "parquet": (
+        lambda ckpt: _overwrite_parts(ckpt / "candidates"),
+        "unreadable {ckpt}/candidates (Py4JJavaError)",
+    ),
+    "meta_missing": (
+        lambda ckpt: shutil.rmtree(ckpt / "candidates__meta"),
+        "unreadable {ckpt}/candidates__meta (AnalysisException)",
+    ),
+    # a write interrupted before Spark's commit marker
+    "no_success": (
+        lambda ckpt: (ckpt / "candidates" / "_SUCCESS").unlink(),
+        "no _SUCCESS in {ckpt}/candidates",
+    ),
+}
+
+
+@pytest.mark.parametrize("broken", sorted(BREAKERS))
+def test_broken_stage_checkpoint_recomputes_that_stage(
+    spark, corpus, checkpointed, tmp_path, caplog, broken
+):
+    """Resume recomputes a stage whose checkpoint is unusable — corrupt
+    data files, no meta, or no ``_SUCCESS`` — and logs which and why."""
+    breaker, reason = BREAKERS[broken]
+    logs = _rerun_broken_candidates(spark, corpus, checkpointed, tmp_path, caplog, breaker)
+    ckpt = tmp_path / "ckpt"
+    assert logs == [f"stage candidates: recomputing checkpoint, {reason.format(ckpt=ckpt)}"]
 
 
 def test_warm_pipeline_run_compiles_no_new_classes(spark, corpus):

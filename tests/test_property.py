@@ -1,4 +1,5 @@
-"""Property-based tests (hypothesis) for the tokenizer/shingle kernels."""
+"""Property-based tests (hypothesis) for the tokenizer/shingle kernels and
+the driver-side connected-components labeler."""
 
 import re
 
@@ -6,6 +7,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from datasketches_rust_spark.operators.connected_components import min_labels
 from datasketches_rust_spark.sigkit.kmv import MAX_THETA63, jaccard_estimate
 from datasketches_rust_spark.sigkit.tokenize import (
     concat_docs,
@@ -50,3 +52,38 @@ def test_shingles_deterministic_and_self_jaccard(texts, width):
         s = v1[o1[i] : o1[i + 1]]
         assert np.all(np.diff(s.astype(np.int64)) > 0)  # sorted distinct
         assert jaccard_estimate(s, MAX_THETA63, s, MAX_THETA63) == 1.0
+
+
+def _union_find_min(edges, n):
+    """Reference labels: plain union-find, then the min node per root."""
+    parent = list(range(n))
+
+    def find(v):
+        while parent[v] != v:
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        parent[find(a)] = find(b)
+    smallest = {}
+    for v in range(n):
+        smallest.setdefault(find(v), v)
+    return [smallest[find(v)] for v in range(n)]
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.integers(1, 60).flatmap(
+        lambda n: st.tuples(
+            st.just(n),
+            st.lists(st.tuples(st.integers(0, n - 1), st.integers(0, n - 1)), max_size=120),
+        )
+    )
+)
+def test_min_labels_matches_union_find(graph):
+    """The numpy hook-to-min labeler == union-find's min node per component,
+    on any edge list (self loops, repeats and either direction included)."""
+    n, edges = graph
+    src = np.array([a for a, _ in edges], dtype=np.int64)
+    dst = np.array([b for _, b in edges], dtype=np.int64)
+    assert min_labels(src, dst, n).tolist() == _union_find_min(edges, n)
