@@ -537,7 +537,9 @@ FROM events GROUP BY 1 HAVING count(*) > 50
 # SQL-expressible; pytest carries their correctness instead:
 # - hll_distinct_users: HLL++ estimate (no SQL equivalent of the estimator)
 # - lsh_dup_pairs_est: banded-MinHash Jaccard *estimates*; recall/precision
-#   vs exact truth asserted in tests/test_pipeline.py (recall 1.0 at J>=0.8)
+#   vs exact truth asserted in tests/test_pipeline.py (recall 1.0 at J>=0.8),
+#   and pair recall >= 0.99 vs ngram_jaccard_pairs' exact oracle checked by
+#   scripts/check_correctness.py
 # - simhash_pairs: needs the xxhash shingle-stream SimHash kernel; kernel
 #   pinned by tests/test_sigkit.py, band completeness by pigeonhole
 # - doc_fingerprints: winnowing minima over the hash stream; guarantee

@@ -20,6 +20,11 @@ MAX_THETA63 = (1 << 63) - 1  # i64::MAX, thetafamily/common/constants.rs:21
 
 TOKEN_REGEX = "[A-Za-z0-9_]+"  # tokenizer v1: identifier runs (ASCII)
 
+# driver bytes budgeted per broadcast key row; broadcast_key_limit rows of
+# this size (~1.5 GB at the default) is also the budget the driver-side
+# candidates/verify path must fit
+KEY_ROW_BYTES = 100
+
 
 @dataclass(frozen=True)
 class PipelineConfig:
@@ -41,14 +46,16 @@ class PipelineConfig:
     # signature scan so the 2KB kmv/band payload never crosses an
     # exchange; False falls back to a materialized shuffle-hash reps
     # stage. None (default) = AUTO: the pipeline decides from the actual
-    # rep-key count after the rep_keys stage materializes — broadcast iff
-    # n_keys <= broadcast_key_limit — so a job approaching driver
-    # capacity degrades to the shuffle path instead of OOMing on a knob
-    # nobody flipped (round-4 ADVICE #3).
+    # rep-key count after the rep_keys stage materializes — candidates and
+    # verify on the driver while the reps' signatures fit the driver budget
+    # (broadcast_key_limit * KEY_ROW_BYTES), else broadcast iff n_keys <=
+    # broadcast_key_limit, else the shuffle fallback — so a job approaching
+    # driver capacity degrades instead of OOMing on a knob nobody flipped
+    # (round-4 ADVICE #3).
     broadcast_rep_payload: bool | None = None
-    # auto-mode ceiling for the broadcast key set: ~100 B/row, so 15M keys
-    # ≈ 1.5 GB — comfortable under an 8g driver and Spark's 8 GB
-    # broadcast-table cap with room for the collect + block copies
+    # auto-mode ceiling for the broadcast key set: KEY_ROW_BYTES per row,
+    # so 15M keys ≈ 1.5 GB — comfortable under an 8g driver and Spark's
+    # 8 GB broadcast-table cap with room for the collect + block copies
     broadcast_key_limit: int = 15_000_000
 
     @property

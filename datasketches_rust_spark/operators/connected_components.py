@@ -41,6 +41,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, functions as F
 
+from .signatures import sha_array, sha_values
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect strictly-larger neighbors of u to min(N(u) ∪ {u})."""
@@ -166,32 +168,14 @@ def min_labels(src: np.ndarray, dst: np.ndarray, n: int) -> np.ndarray:
             label = up
 
 
-def _sha_values(col: pa.ChunkedArray) -> np.ndarray:
-    """A binary column of 32-byte ids as a fixed-width ``S32`` numpy array
-    over the Arrow buffer (the cast rejects any other width)."""
-    arr = col.cast(pa.binary(32)).combine_chunks()
-    # an empty column may carry no data buffer at all
-    buf = arr.buffers()[1] or b""
-    return np.frombuffer(buf, "S32", count=len(arr), offset=32 * arr.offset)
-
-
-def _binary(values: np.ndarray) -> pa.Array:
-    """``S32`` values back to an Arrow binary column, without per-value
-    Python objects."""
-    fixed = pa.FixedSizeBinaryArray.from_buffers(
-        pa.binary(32), len(values), [None, pa.py_buffer(values)]
-    )
-    return fixed.cast(pa.binary())
-
-
 def components_on_driver(edges: DataFrame) -> DataFrame:
     """``connected_components`` for an edge list that fits on the driver:
     one ``toArrow`` collect, ``min_labels`` over the np.unique numbering
     (index order = byte order, so the smallest index is the min id), and
     the (node, component) table back as a Spark relation. Same output."""
     t = edges.select("src", "dst").where(F.col("src") != F.col("dst")).toArrow()
-    src, dst = _sha_values(t.column("src")), _sha_values(t.column("dst"))
+    src, dst = sha_values(t.column("src")), sha_values(t.column("dst"))
     nodes, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
     label = min_labels(idx[: len(src)], idx[len(src) :], len(nodes))
-    table = pa.table({"node": _binary(nodes), "component": _binary(nodes[label])})
+    table = pa.table({"node": sha_array(nodes), "component": sha_array(nodes[label])})
     return edges.sparkSession.createDataFrame(table)

@@ -84,6 +84,26 @@ def _binary_array(values: np.ndarray, elem_offsets: np.ndarray) -> pa.BinaryArra
     )
 
 
+def sha_values(col: pa.ChunkedArray) -> np.ndarray:
+    """A binary column of 32-byte ids (content_sha) as a fixed-width ``S32``
+    numpy array over the Arrow buffer (the cast rejects any other width).
+    ``S32`` order is Spark's unsigned byte-wise binary order, so
+    ``np.unique`` numbers the ids in the order Spark compares them."""
+    arr = col.cast(pa.binary(32)).combine_chunks()
+    # an empty column may carry no data buffer at all
+    buf = arr.buffers()[1] or b""
+    return np.frombuffer(buf, "S32", count=len(arr), offset=32 * arr.offset)
+
+
+def sha_array(values: np.ndarray) -> pa.Array:
+    """``S32`` values back to an Arrow binary column, without per-value
+    Python objects."""
+    fixed = pa.FixedSizeBinaryArray.from_buffers(
+        pa.binary(32), len(values), [None, pa.py_buffer(values)]
+    )
+    return fixed.cast(pa.binary())
+
+
 def signature_record_batch(rb: pa.RecordBatch, cfg: PipelineConfig) -> pa.RecordBatch:
     """Arrow-native signature kernel: UTF-8 bytes never become Python strs."""
     n = rb.num_rows

@@ -17,6 +17,15 @@ The kernel is fully vectorized across a batch of pairs: all signature
 arrays are concatenated into one value vector with pair ids, one lexsort
 finds duplicate (pair, value) entries = per-pair intersection sizes. No
 per-pair Python beyond pointer-level ``np.concatenate``.
+
+Two paths run the same kernel and the same rule (``accepted``):
+``verify_pairs`` joins the pairs to their signatures in Spark and verifies
+in ``mapInPandas`` batches; ``verify_pairs_on_driver`` collects the
+candidate shas' signatures once and verifies the pairs in numpy on the
+driver, which skips the shuffles and the pandas round trip at the UDF
+boundary.
+``DedupPipeline`` pairs it with ``lsh.candidate_pairs_on_driver`` under
+the same driver-budget gate.
 """
 
 from __future__ import annotations
@@ -25,11 +34,15 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from ..config import PipelineConfig
+from ..config import MAX_THETA63, PipelineConfig
+from .signatures import sha_array, sha_values
 
 VERIFIED_SCHEMA = "sha_a binary, sha_b binary, jaccard_est double, accepted boolean"
+# pairs per jaccard_batch call on the driver path
+DRIVER_BATCH = 16_384
 
 
 def jaccard_batch(
@@ -70,6 +83,19 @@ def jaccard_batch(
     # (jaccard_similarity.rs:323-332)
     j = np.where(union > 0, inter / np.maximum(union, 1.0), 1.0)
     return j
+
+
+def accepted(
+    j: np.ndarray, theta_a: np.ndarray, theta_b: np.ndarray, cfg: PipelineConfig
+) -> np.ndarray:
+    """The acceptance rule: exact-mode pairs (both thetas at MAX_THETA63)
+    are thresholded on the estimate itself; a pair with an estimating side
+    is accepted on its upper confidence bound est + 2·sigma, sigma =
+    sqrt(J(1-J)/k)."""
+    estimating = (theta_a < MAX_THETA63) | (theta_b < MAX_THETA63)
+    sigma = np.sqrt(np.clip(j * (1.0 - j), 0.0, None) / cfg.kmv_k)
+    # NUM_STD_DEVS = 2.0, jaccard_similarity.rs:36
+    return np.where(estimating, j + 2.0 * sigma, j) >= cfg.jaccard_threshold
 
 
 def verify_pairs(
@@ -143,11 +169,6 @@ def verify_pairs(
         )
     )
 
-    threshold = cfg.jaccard_threshold
-    k = cfg.kmv_k
-    slack = 2.0  # NUM_STD_DEVS = 2.0, jaccard_similarity.rs:36
-    max_theta = (1 << 63) - 1
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
@@ -155,16 +176,62 @@ def verify_pairs(
             ta = pdf["theta_a"].to_numpy()
             tb = pdf["theta_b"].to_numpy()
             j = jaccard_batch(pdf["kmv_a"].tolist(), ta, pdf["kmv_b"].tolist(), tb)
-            estimating = (ta < max_theta) | (tb < max_theta)
-            sigma = np.sqrt(np.clip(j * (1.0 - j), 0.0, None) / k)
-            ub = np.where(estimating, j + slack * sigma, j)
             yield pd.DataFrame(
                 {
                     "sha_a": pdf["sha_a"],
                     "sha_b": pdf["sha_b"],
                     "jaccard_est": j,
-                    "accepted": ub >= threshold,
+                    "accepted": accepted(j, ta, tb, cfg),
                 }
             )
 
     return joined.mapInPandas(run, schema=VERIFIED_SCHEMA)
+
+
+def verify_pairs_on_driver(
+    candidates: DataFrame, reps: DataFrame, cfg: PipelineConfig
+) -> pa.Table:
+    """``verify_pairs`` for a candidate set whose signatures fit on the
+    driver: one ``toArrow`` collect of the candidate pairs, one of the
+    (content_sha, minhash_kmv, theta64) rows of the candidate shas only
+    (the Spark path's broadcast semi-join), then the same ``jaccard_batch``
+    (DRIVER_BATCH pairs per call) and ``accepted`` rule. Returns the
+    verified table (VERIFIED_SCHEMA) as Arrow; ``jaccard_est`` is bit-equal
+    to the Spark path's.
+
+    Every candidate sha must have a row in ``reps``, as the pipeline's
+    candidates (drawn from the same reps) do. Duplicate rows of one sha —
+    duplicate (content_sha, file_id) corpus rows — carry identical
+    signatures, so the first one serves.
+    """
+    pairs = candidates.select("sha_a", "sha_b").toArrow()
+    sha_a, sha_b = sha_values(pairs.column("sha_a")), sha_values(pairs.column("sha_b"))
+    wanted = reps.sparkSession.createDataFrame(
+        pa.table({"content_sha": sha_array(np.unique(np.concatenate([sha_a, sha_b])))})
+    )
+    sigs = (
+        reps.join(F.broadcast(wanted), "content_sha", "left_semi")
+        .select("content_sha", "minhash_kmv", "theta64")
+        .toArrow()
+    )
+    shas, first = np.unique(sha_values(sigs.column("content_sha")), return_index=True)
+    row_a = first[np.searchsorted(shas, sha_a)]
+    row_b = first[np.searchsorted(shas, sha_b)]
+    kmv = sigs.column("minhash_kmv").to_pylist()
+    theta = sigs.column("theta64").to_numpy()
+    ta, tb = theta[row_a], theta[row_b]
+    # batches bound the kernel's working set (~2 KB per kmv per pair side)
+    j = np.empty(len(ta))
+    for lo in range(0, len(ta), DRIVER_BATCH):
+        hi = lo + DRIVER_BATCH
+        j[lo:hi] = jaccard_batch(
+            [kmv[r] for r in row_a[lo:hi]], ta[lo:hi], [kmv[r] for r in row_b[lo:hi]], tb[lo:hi]
+        )
+    return pa.table(
+        {
+            "sha_a": pairs.column("sha_a"),
+            "sha_b": pairs.column("sha_b"),
+            "jaccard_est": j,
+            "accepted": accepted(j, ta, tb, cfg),
+        }
+    )

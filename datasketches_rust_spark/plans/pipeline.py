@@ -12,7 +12,9 @@ cfg_hash with the upstream stage's fingerprint — the pipeline-level analog
 of the reference's seed-hash compatibility check (hash/seed.rs:42-55): a
 resumed run with a different config or different upstream refuses to reuse
 the checkpoint and recomputes. ``_metrics`` accumulates per-stage row
-counts (map-then-merge accounting, FIXTURES.md F5).
+counts (map-then-merge accounting, FIXTURES.md F5). With or without a
+checkpoint dir, ``rows`` holds each stage's row count and ``decisions``
+each path choice with the numbers behind it.
 """
 
 from __future__ import annotations
@@ -20,14 +22,16 @@ from __future__ import annotations
 import logging
 import os
 
+import pyarrow as pa
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..config import PipelineConfig
+from ..config import KEY_ROW_BYTES, PipelineConfig
 from ..operators.connected_components import components_on_driver, connected_components
 from ..operators.lsh import (
     candidate_pairs,
+    candidate_pairs_on_driver,
     exact_pairs,
     exact_rep_keys,
     exact_representatives,
@@ -36,7 +40,7 @@ from ..operators.lsh import (
 )
 from ..operators.signatures import compute_signatures, file_id_col
 from ..operators.substring import containment_pairs
-from ..operators.verify import verify_pairs
+from ..operators.verify import verify_pairs, verify_pairs_on_driver
 
 log = logging.getLogger(__name__)
 
@@ -52,6 +56,10 @@ class DedupPipeline:
         self.cfg = cfg or PipelineConfig()
         self.dir = checkpoint_dir
         self.metrics: list[tuple] = []  # (stage, rows_out, fingerprint, reused)
+        # latest row count of each stage, measured without a job of its own
+        self.rows: dict[str, int] = {}
+        # (stage, path, measured rows, budget in rows; None when pinned)
+        self.decisions: list[tuple] = []
 
     # ------------------------------------------------------------ checkpoints
 
@@ -71,10 +79,13 @@ class DedupPipeline:
             # (measured: eager per-stage checkpoints beat the lazy variant
             # by ~35s on the 600k-file bench at 16 cores). Single-consumer
             # stages can opt out (materialize=False) and flow straight into
-            # their consumer's aggregation.
+            # their consumer's aggregation. The stage's row count rides the
+            # checkpoint as an observed metric (no count job).
             df = compute()
             if materialize:
-                df = df.localCheckpoint(eager=True)
+                obs = Observation()
+                df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+                self.rows[name] = obs.get["rows"]
             return df, fp
         path = f"{self.dir}/{name}"
         if os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -85,7 +96,8 @@ class DedupPipeline:
                 if found == fp:
                     read = path
                     df = self.spark.read.parquet(path)
-                    self.metrics.append((name, df.count(), fp, True))
+                    self.rows[name] = df.count()
+                    self.metrics.append((name, self.rows[name], fp, True))
                     return df, fp
                 reason = f"fingerprint {found!r}, expected {fp!r}"
             except (AnalysisException, Py4JJavaError, ValueError) as e:
@@ -101,7 +113,8 @@ class DedupPipeline:
             [(name, fp)], "stage string, fingerprint string"
         ).write.mode("overwrite").parquet(self._meta_path(name))
         out = self.spark.read.parquet(path)
-        self.metrics.append((name, out.count(), fp, False))
+        self.rows[name] = out.count()
+        self.metrics.append((name, self.rows[name], fp, False))
         return out, fp
 
     def flush_metrics(self) -> None:
@@ -120,22 +133,19 @@ class DedupPipeline:
         Returns (sigs, ids, rep_map, verified, fp4) where rep_map is the
         narrow (content_sha, rep_file_id) relation.
 
-        Broadcast path (the common case): only the NARROW rep-key table
-        is materialized; consumers re-attach the payload columns they
-        need (candidates: bands; verify: kmv/theta/n_shingles) by
-        broadcasting the key set into the already-materialized signature
-        scan — the ~2KB-wide rows are scanned in place and never
-        re-shuffled or re-materialized (round-3's reps exchange, the
-        pipeline's one bus-bound stage, is gone). Fallback path: the
-        classic materialized wide reps stage, for jobs whose key set
-        exceeds broadcast capacity.
+        Only the NARROW rep-key table is materialized; the candidates and
+        verified stages re-attach the payload columns they need (bands;
+        kmv/theta) from the already-materialized signature table. Three
+        paths, picked by ``_rep_payload_path``:
 
-        cfg.broadcast_rep_payload=None (default) resolves AUTOMATICALLY
-        from the measured rep-key count (<= cfg.broadcast_key_limit →
-        broadcast): the count comes from the rep_keys stage's own
-        materialization (checkpoint metrics, or one narrow job over the
-        ~60 B/row cached blocks), so no extra corpus scan — and no static
-        knob to forget as a job grows toward driver capacity.
+        - driver: one Arrow collect per stage, numpy banding and the same
+          Jaccard kernel (``candidate_pairs_on_driver``,
+          ``verify_pairs_on_driver``); the stages are local relations;
+        - broadcast: the key set broadcasts into the signature scan — the
+          ~2KB-wide rows are scanned in place and never re-shuffled — and
+          the Spark candidate/verify operators run on it;
+        - shuffle: the classic materialized wide reps stage, for jobs whose
+          key set exceeds broadcast capacity.
         """
         # signatures feed several consumers (rep keys, payload attach, the
         # final file_id→cluster map) — materialize once so the kernel runs
@@ -150,41 +160,45 @@ class DedupPipeline:
         # all narrow consumers, and a row-cached wide table gives them no
         # column pruning — this 60B/row table does
         ids, _ = self._stage("ids", fp1, lambda: sigs.select("file_id", "content_sha"))
-        # the duplicate-(sha,fid) probe and the rep-keys agg both read only
-        # the materialized ids blocks and are independent — overlap them
-        # (guide §2.6: actions are only sequential because the driver calls
-        # them sequentially; the probe's tasks back-fill cores the keys
-        # agg's tail leaves idle). Only in the no-checkpoint path: with a
-        # checkpoint dir the probe stays LAZY so a resumed run skips it.
-        probe_fut = None
-        if self.dir is None and self.cfg.broadcast_rep_payload is not False:
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(max_workers=1)
-            probe_fut = pool.submit(has_duplicate_id_rows, ids)
-            pool.shutdown(wait=False)
-        try:
-            keys, fp2 = self._stage("rep_keys", fp1, lambda: exact_rep_keys(ids))
-            broadcast = self.cfg.broadcast_rep_payload
-            if broadcast is None:
-                broadcast = self._stage_rows("rep_keys", keys) <= self.cfg.broadcast_key_limit
-        finally:
-            # read the probe on every path, so its error surfaces even when
-            # the shuffle fallback (which needs no probe) is chosen
-            has_dups = probe_fut.result() if probe_fut is not None else None
+        keys, fp2 = self._stage("rep_keys", fp1, lambda: exact_rep_keys(ids))
+        path = self._rep_payload_path()
         # downstream stages see the RESOLVED decision (verify's cand-sha
         # semi-join pushdown gates on the same broadcast-capacity premise)
-        rcfg = self.cfg.with_(broadcast_rep_payload=broadcast)
-        if broadcast:
-            # duplicate-(sha,fid) probe: lazy (or prefetched above) so
-            # checkpoint resume skips it; at most one narrow job
+        rcfg = self.cfg.with_(broadcast_rep_payload=path != "shuffle")
+        if path == "driver":
+            # duplicate (sha, fid) rows need no probe here: both operators
+            # keep one row per sha
+            cands, fp3 = self._stage(
+                "candidates",
+                fp2,
+                lambda: self._local(
+                    "candidates",
+                    candidate_pairs_on_driver(rep_payload(sigs, keys, ["bands"]), rcfg),
+                ),
+                materialize=False,
+            )
+            verified, fp4 = self._stage(
+                "verified",
+                fp3,
+                lambda: self._local(
+                    "verified",
+                    verify_pairs_on_driver(
+                        cands, rep_payload(sigs, keys, ["minhash_kmv", "theta64"]), rcfg
+                    ),
+                ),
+                materialize=False,
+            )
+        elif path == "broadcast":
+            # duplicate-(sha,fid) probe: lazy so checkpoint resume skips it;
+            # at most one narrow job
             memo: dict = {}
 
             def payload() -> DataFrame:
                 if "p" not in memo:
-                    dups = has_dups if has_dups is not None else has_duplicate_id_rows(ids)
                     memo["p"] = (
-                        sigs.dropDuplicates(["content_sha", "file_id"]) if dups else sigs
+                        sigs.dropDuplicates(["content_sha", "file_id"])
+                        if has_duplicate_id_rows(ids)
+                        else sigs
                     )
                 return memo["p"]
 
@@ -215,15 +229,51 @@ class DedupPipeline:
         rep_map = keys.select("content_sha", "rep_file_id")
         return sigs, ids, rep_map, verified, fp4
 
-    def _stage_rows(self, name: str, df: DataFrame) -> int:
-        """Row count of a just-materialized stage: from the checkpoint
-        metrics when available, else one narrow job over the stage's own
-        cached blocks (~60 B/row for the key tables) — never a corpus
-        rescan."""
-        for stage, rows, *_ in reversed(self.metrics):
-            if stage == name:
-                return rows
-        return df.count()
+    def _rep_payload_path(self) -> str:
+        """'driver', 'broadcast' or 'shuffle', from the measured rep-key
+        count unless cfg.broadcast_rep_payload pins broadcast (True) or
+        shuffle (False).
+
+        Auto mode takes the driver path while the reps' collected
+        signatures (sha + bands + kmv + theta, ~2.3 KB at the defaults)
+        fit the driver budget of broadcast_key_limit rows of KEY_ROW_BYTES
+        and Spark's spark.driver.maxResultSize, past which a collect aborts
+        its job: about 458k reps at the defaults (maxResultSize 1g), 640k
+        with maxResultSize >= 1.5g. Warm runs at 3,000 files (2,644 reps,
+        local[4], traced, 3 seeds): candidates 0.81-1.62 → 0.20-0.26 s and
+        verified 0.78-1.14 → 0.35-0.43 s against the broadcast path, 14
+        fewer Spark jobs per run, no shuffle writes (was 5.4 MB).
+        """
+        n_keys = self.rows["rep_keys"]
+        limit = self.cfg.broadcast_key_limit
+        pinned = self.cfg.broadcast_rep_payload
+        if pinned is not None:
+            path = "broadcast" if pinned else "shuffle"
+            return self._decide("rep_payload", path, n_keys, None)
+        rep_bytes = 32 + 8 * self.cfg.num_bands + 8 * self.cfg.kmv_k + 8
+        budget = limit * KEY_ROW_BYTES
+        conf = self.spark.sparkContext._jsc.sc().getConf()
+        max_result = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+        if max_result:  # 0 = no limit
+            budget = min(budget, max_result)
+        driver_keys = budget // rep_bytes
+        if n_keys <= driver_keys:
+            return self._decide("rep_payload", "driver", n_keys, driver_keys)
+        path = "broadcast" if n_keys <= limit else "shuffle"
+        return self._decide("rep_payload", path, n_keys, limit)
+
+    def _decide(self, stage: str, path: str, rows: int, budget: int | None) -> str:
+        """Record (and log) a path decision with the numbers behind it."""
+        self.decisions.append((stage, path, rows, budget))
+        why = "pinned by the config" if budget is None else f"budget {budget} rows"
+        log.info("stage %s: %s path (%d rows, %s)", stage, path, rows, why)
+        return path
+
+    def _local(self, name: str, table: pa.Table) -> DataFrame:
+        """A driver-computed stage's Arrow table as a local relation; its
+        row count is known without a job."""
+        self.rows[name] = table.num_rows
+        return self.spark.createDataFrame(table)
 
     def run(self, corpus: DataFrame, input_fp: str = "corpus") -> DataFrame:
         """corpus(repo,path,commit,lang,content) → clusters(file_id,
@@ -243,7 +293,10 @@ class DedupPipeline:
             # (0.29 s of task time, the rest driver time between jobs),
             # the driver path 5 jobs in 0.26-0.47 s. The star loop serves
             # graphs beyond the driver's budget.
-            if self._stage_rows("verified", verified) <= self.cfg.broadcast_key_limit:
+            limit = self.cfg.broadcast_key_limit
+            n_verified = self.rows["verified"]
+            path = "driver" if n_verified <= limit else "star"
+            if self._decide("clusters", path, n_verified, limit) == "driver":
                 assign = components_on_driver(edges)
             else:
                 assign = connected_components(edges, checkpoint_dir=self.dir)
@@ -278,7 +331,7 @@ class DedupPipeline:
 
         Exemplar of the ``n_docs`` hint (operators/substring.py): the
         prefilter bloom is sized from the ids stage's measured row count
-        (checkpoint ``_metrics`` or the stage's own cached blocks), so NO
+        (checkpoint ``_metrics`` or observed on its materialization), so NO
         sizing ``count()`` job over the corpus appears in the plan. The
         signature/ids stages are shared with ``run()``/``dup_pairs()`` —
         checkpointed or cached once, reused by every consumer.
@@ -294,7 +347,7 @@ class DedupPipeline:
             text_col="content",
             window=self.cfg.substr_window,
             prefilter=prefilter,
-            n_docs=self._stage_rows("ids", ids),
+            n_docs=self.rows["ids"],
         )
 
     def dup_pairs(self, corpus: DataFrame, input_fp: str = "corpus") -> DataFrame:

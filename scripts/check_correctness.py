@@ -2,12 +2,15 @@
 
 Runs every __spark_entry__.queries() entry at sf0.01 and compares against
 oracle_sql() in DuckDB: row count, column-name set, and order-insensitive
-values (columns sorted by name, rows sorted by all columns). Exits nonzero
+values (columns sorted by name, rows sorted by all columns). An
+estimate-only query with an entry in BOUND_CHECKS is instead checked
+against its stated error bound over an exact DuckDB result. Exits nonzero
 on any mismatch.
 """
 
 from __future__ import annotations
 
+import hashlib
 import sys
 
 import duckdb
@@ -34,6 +37,39 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+MIN_LSH_PAIR_RECALL = 0.99
+
+
+def lsh_pair_recall(got: pd.DataFrame, con) -> tuple[bool, str]:
+    """lsh_dup_pairs_est's recall of the exact J >= 0.8 document pairs
+    (ngram_jaccard_pairs' oracle). A pair is found when both documents map
+    to the same representative (an ``exact`` row) or their representatives
+    form an emitted ``near`` pair."""
+    truth = con.sql(entrymod.oracle_sql()["ngram_jaccard_pairs"]).df()
+    docs = con.sql("SELECT doc_id, source FROM documents").df()
+    # the engine's file id of a documents row (__spark_entry__._docs_as_corpus)
+    fid = {
+        d: hashlib.sha256(f"{s}\x00{d}\x00head".encode()).hexdigest()
+        for d, s in zip(docs["doc_id"], docs["source"])
+    }
+    exact = got[got["kind"] == "exact"]
+    rep = dict(zip(exact["file_id_b"], exact["file_id_a"]))
+    near = got[got["kind"] == "near"]
+    near_pairs = set(zip(near["file_id_a"], near["file_id_b"]))
+    found = 0
+    for a, b in zip(truth["doc_id_a"], truth["doc_id_b"]):
+        ra, rb = rep.get(fid[a], fid[a]), rep.get(fid[b], fid[b])
+        found += ra == rb or (min(ra, rb), max(ra, rb)) in near_pairs
+    recall = found / len(truth) if len(truth) else 1.0
+    msg = f"pair recall {recall:.4f} ({found}/{len(truth)} at exact J >= 0.8)"
+    return recall >= MIN_LSH_PAIR_RECALL, f"{msg}, bound >= {MIN_LSH_PAIR_RECALL}"
+
+
+# estimate-only queries checked against an exact result within a bound,
+# beside oracle_sql() rather than inside it
+BOUND_CHECKS = {"lsh_dup_pairs_est": lsh_pair_recall}
+
+
 def main() -> int:
     from datasketches_rust_spark.plans.session import get_spark
 
@@ -54,6 +90,12 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001
             failures.append(name)
             print(f"[FAIL] {name}: query raised {type(exc).__name__}: {exc}")
+            continue
+        if name in BOUND_CHECKS:
+            ok, msg = BOUND_CHECKS[name](got, con)
+            if not ok:
+                failures.append(name)
+            print(f"[OK]   {name}: {msg}" if ok else f"[FAIL] {name}: {msg}")
             continue
         if name not in oracles:
             print(f"[rows-only] {name}: {len(got)} rows, cols={sorted(got.columns)}")

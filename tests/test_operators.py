@@ -1642,3 +1642,104 @@ def test_bloom_packed_probe_parity(spark):
     # no false negatives: every true member whose key was probed is flagged
     members = {i * 3 for i in range(300)}
     assert all(m for v, m in rp if v in members)
+
+
+def _band_table(spark):
+    """(content_sha, bands) rows for candidate-pair parity: 4 bands with
+    values from a small alphabet (so buckets collide), one band-0 bucket of
+    37 members (a star at max_bucket_size 10), rows with empty bands, and
+    every third row repeated (duplicate (content_sha, file_id) corpus rows).
+    Returns the table with and without the repeats."""
+    rng = np.random.RandomState(11)
+    rows = []
+    for i in range(90):
+        sha = hashlib.sha256(f"doc{i}".encode()).digest()
+        bands = [] if i % 17 == 5 else rng.randint(0, 6, size=4).tolist()
+        if bands and i < 40:
+            bands[0] = 1_000_003
+        rows.append((sha, bands))
+    dups = rows[::3]
+    return (
+        spark.createDataFrame(rows + dups, "content_sha binary, bands array<long>"),
+        spark.createDataFrame(rows, "content_sha binary, bands array<long>"),
+    )
+
+
+def test_candidate_pairs_on_driver_matches_spark(spark):
+    """The driver banding emits the Spark path's pair set: all pairs in
+    small buckets, a star to the min sha in the over-cap bucket, nothing
+    for empty bands; duplicate sha rows collapse (the Spark path gets them
+    deduplicated by the pipeline's probe), and empty input gives no pairs."""
+    from datasketches_rust_spark.operators.lsh import candidate_pairs, candidate_pairs_on_driver
+
+    cfg = CFG.with_(max_bucket_size=10)
+    with_dups, distinct = _band_table(spark)
+    driver = candidate_pairs_on_driver(with_dups, cfg)
+    got = set(zip(driver.column("sha_a").to_pylist(), driver.column("sha_b").to_pylist()))
+    want = {(bytes(r["sha_a"]), bytes(r["sha_b"])) for r in candidate_pairs(distinct, cfg).collect()}
+    assert got == want
+    assert driver.num_rows == len(got)
+    assert all(a < b for a, b in got)
+    # the over-cap bucket is a star: its min sha pairs with every member
+    members = sorted(hashlib.sha256(f"doc{i}".encode()).digest() for i in range(40) if i % 17 != 5)
+    assert {(members[0], m) for m in members[1:]} <= got
+
+    empty = spark.createDataFrame([], "content_sha binary, bands array<long>")
+    assert candidate_pairs_on_driver(empty, cfg).num_rows == 0
+
+
+def _kmv_rows(rng, k):
+    """(content_sha, minhash_kmv, theta64, n_shingles) rows: six families
+    of near-identical shingle sets, half of them sketched in exact mode
+    (fewer than k hashes) and half in estimation mode (k kept, theta the
+    (k+1)-th smallest)."""
+    rows = []
+    for fam in range(6):
+        size = 60 if fam % 2 else 3 * k
+        base = np.unique(rng.randint(1, 1 << 62, size=size, dtype=np.int64))
+        for v in range(4):
+            vals = base.copy()
+            vals[: 6 * v] = rng.randint(1, 1 << 62, size=6 * v, dtype=np.int64)
+            vals = np.unique(vals)
+            kept, theta = (vals[:k], int(vals[k])) if len(vals) > k else (vals, (1 << 63) - 1)
+            sha = hashlib.sha256(f"f{fam}v{v}".encode()).digest()
+            rows.append((sha, kept.astype("<u8").tobytes(), theta, len(vals)))
+    return rows
+
+
+def test_verify_pairs_on_driver_matches_spark(spark, monkeypatch):
+    """Driver verification == verify_pairs on exact-mode and estimating
+    sketches: the same accepted flags and bit-equal jaccard_est (the same
+    kernel on the same inputs), whatever the pair's batch."""
+    from datasketches_rust_spark.operators import verify as V
+    from datasketches_rust_spark.operators.verify import verify_pairs, verify_pairs_on_driver
+
+    monkeypatch.setattr(V, "DRIVER_BATCH", 100)  # 276 pairs: three batches
+
+    cfg = CFG.with_(kmv_k=64, broadcast_rep_payload=True)
+    rows = _kmv_rows(np.random.RandomState(5), cfg.kmv_k)
+    reps = spark.createDataFrame(
+        rows, "content_sha binary, minhash_kmv binary, theta64 long, n_shingles long"
+    )
+    shas = sorted(r[0] for r in rows)
+    cands = spark.createDataFrame(
+        [(a, b) for i, a in enumerate(shas) for b in shas[i + 1 :]], "sha_a binary, sha_b binary"
+    )
+    spark_rows = {
+        (bytes(r["sha_a"]), bytes(r["sha_b"])): (r["jaccard_est"], r["accepted"])
+        for r in verify_pairs(cands, reps, cfg).collect()
+    }
+    t = verify_pairs_on_driver(cands, reps, cfg)
+    driver_rows = {
+        (a, b): (j, ok)
+        for a, b, j, ok in zip(*(t.column(c).to_pylist() for c in t.column_names))
+    }
+    assert driver_rows == spark_rows
+    assert len(driver_rows) == 276
+    # both modes reach the +2 sigma rule and both outcomes occur
+    accepted = [ok for _, ok in driver_rows.values()]
+    assert any(accepted) and not all(accepted)
+    assert any(0 < j < cfg.jaccard_threshold and ok for j, ok in driver_rows.values())
+
+    none = spark.createDataFrame([], "sha_a binary, sha_b binary")
+    assert verify_pairs_on_driver(none, reps, cfg).num_rows == 0

@@ -237,47 +237,68 @@ def test_pipeline_containment_threads_ndocs_hint(spark, corpus, monkeypatch):
 
 
 def test_rep_payload_auto_mode_resolves_from_key_count(spark, corpus, monkeypatch):
-    """broadcast_rep_payload=None derives the join side from the measured
-    rep-key count (round-4 ADVICE #3: no static knob to forget): a limit
-    below the key count forces the shuffle fallback, a comfortable limit
-    keeps the broadcast path — both with identical clusters; a failing
-    duplicate probe fails the run on either path. The same limit picks
-    the connected-components path from the verified row count: the
-    default clusters on the driver, a limit of 1 runs the star loop."""
+    """broadcast_rep_payload=None derives the rep-payload path from the
+    measured rep-key count (round-4 ADVICE #3: no static knob to forget):
+    the default finds candidates on the driver, a limit of 2 x n_keys keeps
+    the Spark broadcast path, a limit of 1 forces the shuffle fallback —
+    all with identical clusters. The same limit picks the
+    connected-components path from the verified row count: the default
+    clusters on the driver, a limit of 1 runs the star loop. Each run
+    records its decisions with the numbers behind them; a failing
+    duplicate probe fails the broadcast path."""
     import datasketches_rust_spark.plans.pipeline as P
 
     calls = []
-    for name in ("components_on_driver", "connected_components"):
+    for name in (
+        "candidate_pairs_on_driver",
+        "candidate_pairs",
+        "components_on_driver",
+        "connected_components",
+    ):
 
-        def spy(edges, *args, _name=name, _orig=getattr(P, name), **kw):
+        def spy(first, *args, _name=name, _orig=getattr(P, name), **kw):
             calls.append(_name)
-            return _orig(edges, *args, **kw)
+            return _orig(first, *args, **kw)
 
         monkeypatch.setattr(P, name, spy)
 
-    a = (
-        DedupPipeline(spark, CFG.with_(broadcast_rep_payload=None))
-        .run(corpus.drop("file_seq"))
-        .orderBy("file_id")
-        .toPandas()
-    )
-    assert calls == ["components_on_driver"]
-    forced_fallback = DedupPipeline(
-        spark, CFG.with_(broadcast_rep_payload=None, broadcast_key_limit=1)
-    )
-    b = forced_fallback.run(corpus.drop("file_seq")).orderBy("file_id").toPandas()
-    assert calls == ["components_on_driver", "connected_components"]
+    def run(**kw):
+        calls.clear()
+        pipe = DedupPipeline(spark, CFG.with_(broadcast_rep_payload=None, **kw))
+        out = pipe.run(corpus.drop("file_seq")).orderBy("file_id").toPandas()
+        return pipe, list(calls), out
+
+    pipe, path, a = run()
+    assert path == ["candidate_pairs_on_driver", "components_on_driver"]
+    n_keys, n_verified = 1744, 2154  # distinct contents; candidate pairs
+    assert pipe.decisions == [
+        # maxResultSize 1g (< 15M keys x 100 B) over 2,344 B per rep
+        ("rep_payload", "driver", n_keys, 458_080),
+        ("clusters", "driver", n_verified, 15_000_000),
+    ]
+    assert pipe.rows["rep_keys"] == n_keys and pipe.rows["verified"] == n_verified
+
+    pipe, path, b = run(broadcast_key_limit=2 * n_keys)
+    assert path == ["candidate_pairs", "components_on_driver"]
+    assert pipe.decisions[0] == ("rep_payload", "broadcast", n_keys, 2 * n_keys)
     pd.testing.assert_frame_equal(a, b)
 
-    # the prefetched duplicate probe is read even when the fallback (which
-    # needs no probe) is chosen: its error must not be lost
+    pipe, path, c = run(broadcast_key_limit=1)
+    assert path == ["candidate_pairs", "connected_components"]
+    assert pipe.decisions == [
+        ("rep_payload", "shuffle", n_keys, 1),
+        ("clusters", "star", n_verified, 1),
+    ]
+    pd.testing.assert_frame_equal(a, c)
+
+    # the broadcast path's lazy duplicate probe: its error is not lost
     def failing_probe(ids):
         raise RuntimeError("probe failed")
 
     monkeypatch.setattr(P, "has_duplicate_id_rows", failing_probe)
     with pytest.raises(RuntimeError, match="probe failed"):
         DedupPipeline(
-            spark, CFG.with_(broadcast_rep_payload=None, broadcast_key_limit=0)
+            spark, CFG.with_(broadcast_rep_payload=None, broadcast_key_limit=2 * n_keys)
         ).run(corpus.drop("file_seq"))
 
 

@@ -1,6 +1,7 @@
 """Property-based tests (hypothesis) for the tokenizer/shingle kernels and
-the driver-side connected-components labeler."""
+the driver-side LSH bucketing and connected-components labeler."""
 
+import itertools
 import re
 
 import numpy as np
@@ -8,6 +9,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from datasketches_rust_spark.operators.connected_components import min_labels
+from datasketches_rust_spark.operators.lsh import ragged_pairs
 from datasketches_rust_spark.sigkit.kmv import MAX_THETA63, jaccard_estimate
 from datasketches_rust_spark.sigkit.tokenize import (
     concat_docs,
@@ -87,3 +89,20 @@ def test_min_labels_matches_union_find(graph):
     src = np.array([a for a, _ in edges], dtype=np.int64)
     dst = np.array([b for _, b in edges], dtype=np.int64)
     assert min_labels(src, dst, n).tolist() == _union_find_min(edges, n)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.tuples(st.integers(0, 3), st.integers(0, 12)), max_size=20))
+def test_ragged_pairs_match_combinations(buckets):
+    """The vectorized ragged-pairs generator == itertools.combinations of
+    each bucket, in bucket order (empty, single and gapped buckets too)."""
+    starts, pos = [], 0
+    for gap, size in buckets:
+        starts.append(pos + gap)
+        pos += gap + size
+    sizes = [size for _, size in buckets]
+    i, j = ragged_pairs(np.array(starts, dtype=np.int64), np.array(sizes, dtype=np.int64))
+    want = [
+        p for s, n in zip(starts, sizes) for p in itertools.combinations(range(s, s + n), 2)
+    ]
+    assert list(zip(i.tolist(), j.tolist())) == want
