@@ -24,6 +24,10 @@ TOKEN_REGEX = "[A-Za-z0-9_]+"  # tokenizer v1: identifier runs (ASCII)
 # this size (~1.5 GB at the default) is also the budget the driver-side
 # candidates/verify path must fit
 KEY_ROW_BYTES = 100
+# driver bytes per LSH candidate pair on the driver path: the pair arrays
+# peak at 65-73 B per emitted pair, the sha columns hold 72 B per distinct
+# pair (6,000 reps in ~100- and ~180-member buckets, 9.6M and 15.6M pairs)
+PAIR_BYTES = 150
 
 
 @dataclass(frozen=True)
@@ -47,7 +51,8 @@ class PipelineConfig:
     # exchange; False falls back to a materialized shuffle-hash reps
     # stage. None (default) = AUTO: the pipeline decides from the actual
     # rep-key count after the rep_keys stage materializes — candidates and
-    # verify on the driver while the reps' signatures fit the driver budget
+    # verify on the driver up to the largest rep count measured to win
+    # there while the reps' signatures fit the driver budget
     # (broadcast_key_limit * KEY_ROW_BYTES), else broadcast iff n_keys <=
     # broadcast_key_limit, else the shuffle fallback — so a job approaching
     # driver capacity degrades instead of OOMing on a knob nobody flipped

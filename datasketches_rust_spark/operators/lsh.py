@@ -25,13 +25,15 @@ are recovered at cluster level via the hub.
 Two implementations of steps 2-5 share that contract:
 ``candidate_pairs`` (the Spark plan above, for rep sets of any size) and
 ``candidate_pairs_on_driver`` (one Arrow collect of the reps' bands, numpy
-bucketing, ``ragged_pairs``). ``DedupPipeline`` takes the driver path while
+bucketing, ``ragged_pairs``). ``DedupPipeline`` takes the driver path up
+to the largest rep count measured to win there (``DRIVER_REPS``) while
 the reps' signatures fit the driver budget (rep count x ~2.3 KB within
-broadcast_key_limit x KEY_ROW_BYTES and spark.driver.maxResultSize, ~458k
-reps at the defaults): after exact dedup the merged summary is small, and
-on small relations the Spark path's per-job driver overhead, not its
-bytes, sets the wall. The measured numbers are next to that branch
-(``DedupPipeline._rep_payload_path``).
+broadcast_key_limit x KEY_ROW_BYTES and spark.driver.maxResultSize), and
+hands the stage back to ``candidate_pairs`` when the buckets would emit
+more pairs than that budget holds at PAIR_BYTES each: after exact dedup
+the merged summary is small, and on small relations the Spark path's
+per-job driver overhead, not its bytes, sets the wall. The measured
+numbers are next to those limits (``plans/pipeline.py``).
 """
 
 from __future__ import annotations
@@ -235,10 +237,13 @@ def ragged_pairs(starts: np.ndarray, sizes: np.ndarray) -> tuple[np.ndarray, np.
     return np.repeat(pos, after), _ranges(pos + 1, after)
 
 
-def candidate_pairs_on_driver(reps: DataFrame, cfg) -> pa.Table:
+def candidate_pairs_on_driver(
+    reps: DataFrame, cfg, max_pairs: int | None = None
+) -> tuple[pa.Table | None, int]:
     """``candidate_pairs`` for reps whose band signatures fit on the driver:
     one ``toArrow`` collect of (content_sha, bands), numpy bucketing, and
-    the distinct (sha_a < sha_b) pairs returned as an Arrow table.
+    the distinct (sha_a < sha_b) pairs returned as an Arrow table, with the
+    number of pairs the buckets emit before the distinct.
 
     - ``np.unique`` over the shas' ``S32`` view numbers the nodes in byte
       order, so index order is Spark's ``sha_a < sha_b``; it also keeps one
@@ -249,6 +254,11 @@ def candidate_pairs_on_driver(reps: DataFrame, cfg) -> pa.Table:
       (``ragged_pairs``), larger ones a star to the bucket's min node — the
       ``capped_bucket_pairs`` rule — and the pairs are made distinct by
       their ``a * n + b`` code.
+    - The emitted pair count is known from the bucket sizes before any
+      pair array exists; past ``max_pairs`` the table is ``None`` and no
+      pair is built, so the caller can hand the stage to Spark (a few
+      200-member buckets per band already make millions of pairs, each
+      ~PAIR_BYTES of driver memory).
 
     Bucket identity: this path buckets on the exact (band, bhash), the
     Spark path on its 64-bit ``xxhash64`` pack. They differ only when two
@@ -276,8 +286,11 @@ def candidate_pairs_on_driver(reps: DataFrame, cfg) -> pa.Table:
     sizes = np.diff(np.append(starts, len(node)))
 
     small = (sizes >= 2) & (sizes <= cfg.max_bucket_size)
-    i, j = ragged_pairs(starts[small], sizes[small])
     big = sizes > cfg.max_bucket_size
+    n_pairs = int((sizes[small] * (sizes[small] - 1) // 2).sum() + (sizes[big] - 1).sum())
+    if max_pairs is not None and n_pairs > max_pairs:
+        return None, n_pairs
+    i, j = ragged_pairs(starts[small], sizes[small])
     # nodes are in no particular order inside a bucket: order each pair,
     # and star each big bucket to its min node
     hub = np.repeat(np.minimum.reduceat(node, starts)[big], sizes[big])
@@ -285,4 +298,5 @@ def candidate_pairs_on_driver(reps: DataFrame, cfg) -> pa.Table:
     a = np.concatenate([np.minimum(node[i], node[j]), hub[hub != spoke]])
     b = np.concatenate([np.maximum(node[i], node[j]), spoke[hub != spoke]])
     code = np.unique(a * n + b)
-    return pa.table({"sha_a": sha_array(nodes[code // n]), "sha_b": sha_array(nodes[code % n])})
+    pairs = pa.table({"sha_a": sha_array(nodes[code // n]), "sha_b": sha_array(nodes[code % n])})
+    return pairs, n_pairs

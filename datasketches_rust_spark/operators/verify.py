@@ -23,9 +23,10 @@ Two paths run the same kernel and the same rule (``accepted``):
 in ``mapInPandas`` batches; ``verify_pairs_on_driver`` collects the
 candidate shas' signatures once and verifies the pairs in numpy on the
 driver, which skips the shuffles and the pandas round trip at the UDF
-boundary.
-``DedupPipeline`` pairs it with ``lsh.candidate_pairs_on_driver`` under
-the same driver-budget gate.
+boundary but runs the kernel on one core. ``DedupPipeline`` pairs it with
+``lsh.candidate_pairs_on_driver`` up to the measured crossover in
+candidate pairs (``DRIVER_VERIFY_PAIRS``, ``plans/pipeline.py``) and
+verifies larger candidate sets with ``verify_pairs``.
 """
 
 from __future__ import annotations

@@ -27,7 +27,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..config import KEY_ROW_BYTES, PipelineConfig
+from ..config import KEY_ROW_BYTES, PAIR_BYTES, PipelineConfig
 from ..operators.connected_components import components_on_driver, connected_components
 from ..operators.lsh import (
     candidate_pairs,
@@ -43,6 +43,25 @@ from ..operators.substring import containment_pairs
 from ..operators.verify import verify_pairs, verify_pairs_on_driver
 
 log = logging.getLogger(__name__)
+
+# Driver-path limits, each where the driver was measured against the Spark
+# broadcast path (stage walls, warm local[4] session, generated corpora at
+# size_scale 1, rep subsets of a 25,000- and a 200,000-file corpus, 3
+# alternating pairs per point):
+# - candidates won at every rep count measured: 3,576 reps 0.47-0.83 vs
+#   1.48-3.73 s, 22,444 reps 0.50-0.83 vs 2.07-3.04 s, 89,857 reps
+#   1.08-1.64 vs 5.91-6.06 s, 179,944 reps 2.90-6.28 vs 15.1-24.9 s (6g
+#   driver; with 3g the Spark path's band join failed to build its hash
+#   relation). DRIVER_REPS rounds the largest up; past it the driver path
+#   is unmeasured. A whole run at 179,944 reps (146,200 candidate pairs,
+#   verified by Spark) took 12.3-12.4 s against 19.4-21.3 s warm, with
+#   identical clusters.
+DRIVER_REPS = 180_000
+# - verified runs jaccard_batch on one core, where Spark runs it on all:
+#   the driver won at 5,000 candidate pairs (22,444 reps: 0.74-0.92 vs
+#   0.95-1.44 s; 179,944 reps: 0.75-0.89 vs 1.01-1.80 s) and lost or tied
+#   at 10,000 (1.30-1.48 vs 1.11-1.25 s; 1.40-1.44 vs 1.31-1.70 s).
+DRIVER_VERIFY_PAIRS = 5_000
 
 
 class DedupPipeline:
@@ -80,9 +99,12 @@ class DedupPipeline:
             # by ~35s on the 600k-file bench at 16 cores). Single-consumer
             # stages can opt out (materialize=False) and flow straight into
             # their consumer's aggregation. The stage's row count rides the
-            # checkpoint as an observed metric (no count job).
+            # checkpoint as an observed metric (no count job). A stage
+            # computed on the driver is a local relation that already
+            # recorded its row count (``_local``): nothing to checkpoint.
+            self.rows.pop(name, None)
             df = compute()
-            if materialize:
+            if materialize and name not in self.rows:
                 obs = Observation()
                 df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
                 self.rows[name] = obs.get["rows"]
@@ -140,7 +162,12 @@ class DedupPipeline:
 
         - driver: one Arrow collect per stage, numpy banding and the same
           Jaccard kernel (``candidate_pairs_on_driver``,
-          ``verify_pairs_on_driver``); the stages are local relations;
+          ``verify_pairs_on_driver``); the stages are local relations.
+          Each stage hands its work to the broadcast path's Spark operator
+          when it measures more pairs than the driver serves: candidates
+          when its buckets emit more pairs than the driver budget holds,
+          verified past the measured crossover in candidate pairs
+          (DRIVER_VERIFY_PAIRS);
         - broadcast: the key set broadcasts into the signature scan — the
           ~2KB-wide rows are scanned in place and never re-shuffled — and
           the Spark candidate/verify operators run on it;
@@ -165,55 +192,66 @@ class DedupPipeline:
         # downstream stages see the RESOLVED decision (verify's cand-sha
         # semi-join pushdown gates on the same broadcast-capacity premise)
         rcfg = self.cfg.with_(broadcast_rep_payload=path != "shuffle")
+        # the Spark operators' payload on the key broadcast, after the
+        # duplicate-(sha,fid) probe: lazy so checkpoint resume skips it; at
+        # most one narrow job
+        memo: dict = {}
+
+        def payload(cols: list[str]) -> DataFrame:
+            if "p" not in memo:
+                memo["p"] = (
+                    sigs.dropDuplicates(["content_sha", "file_id"])
+                    if has_duplicate_id_rows(ids)
+                    else sigs
+                )
+            return rep_payload(memo["p"], keys, cols)
+
         if path == "driver":
-            # duplicate (sha, fid) rows need no probe here: both operators
-            # keep one row per sha
-            cands, fp3 = self._stage(
-                "candidates",
-                fp2,
-                lambda: self._local(
-                    "candidates",
-                    candidate_pairs_on_driver(rep_payload(sigs, keys, ["bands"]), rcfg),
-                ),
-                materialize=False,
-            )
-            verified, fp4 = self._stage(
-                "verified",
-                fp3,
-                lambda: self._local(
-                    "verified",
-                    verify_pairs_on_driver(
-                        cands, rep_payload(sigs, keys, ["minhash_kmv", "theta64"]), rcfg
-                    ),
-                ),
-                materialize=False,
-            )
-        elif path == "broadcast":
-            # duplicate-(sha,fid) probe: lazy so checkpoint resume skips it;
-            # at most one narrow job
-            memo: dict = {}
+            max_pairs = self._driver_budget() // PAIR_BYTES
+            verify_limit = min(DRIVER_VERIFY_PAIRS, max_pairs)
 
-            def payload() -> DataFrame:
-                if "p" not in memo:
-                    memo["p"] = (
-                        sigs.dropDuplicates(["content_sha", "file_id"])
-                        if has_duplicate_id_rows(ids)
-                        else sigs
+            def driver_candidates() -> DataFrame:
+                # duplicate (sha, fid) rows need no probe here: the driver
+                # operators keep one row per sha
+                pairs, n_pairs = candidate_pairs_on_driver(
+                    rep_payload(sigs, keys, ["bands"]), rcfg, max_pairs
+                )
+                where = "spark" if pairs is None else "driver"
+                if self._decide("candidates", where, n_pairs, max_pairs) == "spark":
+                    return candidate_pairs(payload(["bands"]), rcfg)
+                if pairs.num_rows <= verify_limit:
+                    return self._local("candidates", pairs)
+                # verify_pairs reads its candidates three times, and a
+                # driver table is decoded from Arrow on every read: the
+                # stage's eager checkpoint saved 1.1-5.0 s over 146,200
+                # pairs (200,000 files)
+                return self.spark.createDataFrame(pairs)
+
+            def driver_verified() -> DataFrame:
+                n_cands = self.rows["candidates"]
+                where = "driver" if n_cands <= verify_limit else "spark"
+                if self._decide("verified", where, n_cands, verify_limit) == "driver":
+                    return self._local(
+                        "verified",
+                        verify_pairs_on_driver(
+                            cands, rep_payload(sigs, keys, ["minhash_kmv", "theta64"]), rcfg
+                        ),
                     )
-                return memo["p"]
+                return verify_pairs(
+                    cands, payload(["n_shingles", "minhash_kmv", "theta64"]), rcfg
+                )
 
+            cands, fp3 = self._stage("candidates", fp2, driver_candidates)
+            verified, fp4 = self._stage("verified", fp3, driver_verified)
+        elif path == "broadcast":
             cands, fp3 = self._stage(
-                "candidates",
-                fp2,
-                lambda: candidate_pairs(rep_payload(payload(), keys, ["bands"]), rcfg),
+                "candidates", fp2, lambda: candidate_pairs(payload(["bands"]), rcfg)
             )
             verified, fp4 = self._stage(
                 "verified",
                 fp3,
                 lambda: verify_pairs(
-                    cands,
-                    rep_payload(payload(), keys, ["n_shingles", "minhash_kmv", "theta64"]),
-                    rcfg,
+                    cands, payload(["n_shingles", "minhash_kmv", "theta64"]), rcfg
                 ),
             )
         else:
@@ -234,15 +272,14 @@ class DedupPipeline:
         count unless cfg.broadcast_rep_payload pins broadcast (True) or
         shuffle (False).
 
-        Auto mode takes the driver path while the reps' collected
+        Auto mode takes the driver path up to DRIVER_REPS reps, the largest
+        rep set measured to win there, and while the reps' collected
         signatures (sha + bands + kmv + theta, ~2.3 KB at the defaults)
-        fit the driver budget of broadcast_key_limit rows of KEY_ROW_BYTES
-        and Spark's spark.driver.maxResultSize, past which a collect aborts
-        its job: about 458k reps at the defaults (maxResultSize 1g), 640k
-        with maxResultSize >= 1.5g. Warm runs at 3,000 files (2,644 reps,
-        local[4], traced, 3 seeds): candidates 0.81-1.62 → 0.20-0.26 s and
-        verified 0.78-1.14 → 0.35-0.43 s against the broadcast path, 14
-        fewer Spark jobs per run, no shuffle writes (was 5.4 MB).
+        fit ``_driver_budget``. On the 3,000-file benchmark corpus (2,644
+        reps, 759 candidate pairs; local[4], traced, 3 seeds) the driver
+        path took candidates from 0.81-1.62 to 0.20-0.26 s and verified
+        from 0.78-1.14 to 0.35-0.43 s, with 14 fewer Spark jobs per run
+        and no shuffle writes (was 5.4 MB).
         """
         n_keys = self.rows["rep_keys"]
         limit = self.cfg.broadcast_key_limit
@@ -251,16 +288,20 @@ class DedupPipeline:
             path = "broadcast" if pinned else "shuffle"
             return self._decide("rep_payload", path, n_keys, None)
         rep_bytes = 32 + 8 * self.cfg.num_bands + 8 * self.cfg.kmv_k + 8
-        budget = limit * KEY_ROW_BYTES
-        conf = self.spark.sparkContext._jsc.sc().getConf()
-        max_result = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
-        if max_result:  # 0 = no limit
-            budget = min(budget, max_result)
-        driver_keys = budget // rep_bytes
+        driver_keys = min(DRIVER_REPS, self._driver_budget() // rep_bytes)
         if n_keys <= driver_keys:
             return self._decide("rep_payload", "driver", n_keys, driver_keys)
         path = "broadcast" if n_keys <= limit else "shuffle"
         return self._decide("rep_payload", path, n_keys, limit)
+
+    def _driver_budget(self) -> int:
+        """Driver bytes the driver-side stages may hold: broadcast_key_limit
+        rows of KEY_ROW_BYTES, and no more than spark.driver.maxResultSize,
+        past which a collect aborts its job."""
+        budget = self.cfg.broadcast_key_limit * KEY_ROW_BYTES
+        conf = self.spark.sparkContext._jsc.sc().getConf()
+        max_result = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+        return min(budget, max_result) if max_result else budget  # 0 = no limit
 
     def _decide(self, stage: str, path: str, rows: int, budget: int | None) -> str:
         """Record (and log) a path decision with the numbers behind it."""

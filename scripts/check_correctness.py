@@ -10,14 +10,15 @@ on any mismatch.
 
 from __future__ import annotations
 
-import hashlib
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not an installed or other copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -40,18 +41,19 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 MIN_LSH_PAIR_RECALL = 0.99
 
 
-def lsh_pair_recall(got: pd.DataFrame, con) -> tuple[bool, str]:
+def lsh_pair_recall(got: pd.DataFrame, con, spark) -> tuple[bool, str]:
     """lsh_dup_pairs_est's recall of the exact J >= 0.8 document pairs
     (ngram_jaccard_pairs' oracle). A pair is found when both documents map
     to the same representative (an ``exact`` row) or their representatives
     form an emitted ``near`` pair."""
+    from datasketches_rust_spark.operators.signatures import file_id_col
+
     truth = con.sql(entrymod.oracle_sql()["ngram_jaccard_pairs"]).df()
-    docs = con.sql("SELECT doc_id, source FROM documents").df()
-    # the engine's file id of a documents row (__spark_entry__._docs_as_corpus)
-    fid = {
-        d: hashlib.sha256(f"{s}\x00{d}\x00head".encode()).hexdigest()
-        for d, s in zip(docs["doc_id"], docs["source"])
-    }
+    # the engine's own file id of each documents row, over the same corpus
+    # view the query builds
+    docs = entrymod._docs_as_corpus(entrymod._t(spark, SF_DIR, "documents"))
+    ids = docs.select("path", file_id_col().alias("file_id")).toPandas()
+    fid = {int(d): f for d, f in zip(ids["path"], ids["file_id"])}
     exact = got[got["kind"] == "exact"]
     rep = dict(zip(exact["file_id_b"], exact["file_id_a"]))
     near = got[got["kind"] == "near"]
@@ -92,7 +94,7 @@ def main() -> int:
             print(f"[FAIL] {name}: query raised {type(exc).__name__}: {exc}")
             continue
         if name in BOUND_CHECKS:
-            ok, msg = BOUND_CHECKS[name](got, con)
+            ok, msg = BOUND_CHECKS[name](got, con, spark)
             if not ok:
                 failures.append(name)
             print(f"[OK]   {name}: {msg}" if ok else f"[FAIL] {name}: {msg}")

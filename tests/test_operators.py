@@ -1,6 +1,7 @@
 """Spark-level operator tests on small in-memory data."""
 
 import hashlib
+from collections import Counter
 
 import numpy as np
 import pytest
@@ -1674,7 +1675,7 @@ def test_candidate_pairs_on_driver_matches_spark(spark):
 
     cfg = CFG.with_(max_bucket_size=10)
     with_dups, distinct = _band_table(spark)
-    driver = candidate_pairs_on_driver(with_dups, cfg)
+    driver, _ = candidate_pairs_on_driver(with_dups, cfg)
     got = set(zip(driver.column("sha_a").to_pylist(), driver.column("sha_b").to_pylist()))
     want = {(bytes(r["sha_a"]), bytes(r["sha_b"])) for r in candidate_pairs(distinct, cfg).collect()}
     assert got == want
@@ -1685,7 +1686,37 @@ def test_candidate_pairs_on_driver_matches_spark(spark):
     assert {(members[0], m) for m in members[1:]} <= got
 
     empty = spark.createDataFrame([], "content_sha binary, bands array<long>")
-    assert candidate_pairs_on_driver(empty, cfg).num_rows == 0
+    pairs, n_pairs = candidate_pairs_on_driver(empty, cfg)
+    assert pairs.num_rows == 0 and n_pairs == 0
+
+
+def test_candidate_pairs_on_driver_pair_budget(spark):
+    """The driver banding counts the pairs its buckets emit before it
+    builds any — all pairs of a bucket within max_bucket_size, one spoke
+    per non-min member above it — and past max_pairs returns no table, so
+    the pipeline hands the stage to Spark. Many buckets at the cap: eight
+    bands of twenty 10-member buckets, one band of three star buckets."""
+    from datasketches_rust_spark.operators.lsh import candidate_pairs, candidate_pairs_on_driver
+
+    cfg = CFG.with_(max_bucket_size=10)
+    rows = [
+        (
+            hashlib.sha256(f"doc{i}".encode()).digest(),
+            [(i + 7 * b) % 20 for b in range(8)] + [i % 3],
+        )
+        for i in range(200)
+    ]
+    reps = spark.createDataFrame(rows, "content_sha binary, bands array<long>")
+    sizes = Counter((b, v) for _, bands in rows for b, v in enumerate(bands)).values()
+    emitted = sum(s * (s - 1) // 2 if s <= 10 else s - 1 for s in sizes)
+    assert emitted == 8 * 20 * 45 + 66 + 66 + 65
+
+    assert candidate_pairs_on_driver(reps, cfg, max_pairs=emitted - 1) == (None, emitted)
+    pairs, n_pairs = candidate_pairs_on_driver(reps, cfg, max_pairs=emitted)
+    assert n_pairs == emitted
+    got = set(zip(pairs.column("sha_a").to_pylist(), pairs.column("sha_b").to_pylist()))
+    want = {(bytes(r["sha_a"]), bytes(r["sha_b"])) for r in candidate_pairs(reps, cfg).collect()}
+    assert got == want and pairs.num_rows == len(got) < emitted
 
 
 def _kmv_rows(rng, k):

@@ -16,7 +16,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from datasketches_rust_spark.config import PipelineConfig
+from datasketches_rust_spark.config import PAIR_BYTES, PipelineConfig
 from datasketches_rust_spark.corpus.generator import (
     content_sha_pandas,
     corpus_spark,
@@ -243,15 +243,19 @@ def test_rep_payload_auto_mode_resolves_from_key_count(spark, corpus, monkeypatc
     the Spark broadcast path, a limit of 1 forces the shuffle fallback —
     all with identical clusters. The same limit picks the
     connected-components path from the verified row count: the default
-    clusters on the driver, a limit of 1 runs the star loop. Each run
-    records its decisions with the numbers behind them; a failing
-    duplicate probe fails the broadcast path."""
+    clusters on the driver, a limit of 1 runs the star loop. On the
+    driver path, verify goes to Spark past DRIVER_VERIFY_PAIRS candidates,
+    and both stages do when the buckets emit more pairs than the driver
+    budget holds. Each run records its decisions with the numbers behind
+    them; a failing duplicate probe fails the broadcast path."""
     import datasketches_rust_spark.plans.pipeline as P
 
     calls = []
     for name in (
         "candidate_pairs_on_driver",
         "candidate_pairs",
+        "verify_pairs_on_driver",
+        "verify_pairs",
         "components_on_driver",
         "connected_components",
     ):
@@ -269,27 +273,55 @@ def test_rep_payload_auto_mode_resolves_from_key_count(spark, corpus, monkeypatc
         return pipe, list(calls), out
 
     pipe, path, a = run()
-    assert path == ["candidate_pairs_on_driver", "components_on_driver"]
-    n_keys, n_verified = 1744, 2154  # distinct contents; candidate pairs
+    assert path == ["candidate_pairs_on_driver", "verify_pairs_on_driver", "components_on_driver"]
+    # distinct contents; pairs the buckets emit; distinct candidate pairs
+    n_keys, n_emitted, n_verified = 1744, 9452, 2154
+    # driver budget: maxResultSize 1g (< 15M keys x 100 B); 2,344 B per rep
+    max_pairs = (1 << 30) // PAIR_BYTES
     assert pipe.decisions == [
-        # maxResultSize 1g (< 15M keys x 100 B) over 2,344 B per rep
-        ("rep_payload", "driver", n_keys, 458_080),
+        ("rep_payload", "driver", n_keys, min(P.DRIVER_REPS, (1 << 30) // 2344)),
+        ("candidates", "driver", n_emitted, max_pairs),
+        ("verified", "driver", n_verified, P.DRIVER_VERIFY_PAIRS),
         ("clusters", "driver", n_verified, 15_000_000),
     ]
     assert pipe.rows["rep_keys"] == n_keys and pipe.rows["verified"] == n_verified
 
     pipe, path, b = run(broadcast_key_limit=2 * n_keys)
-    assert path == ["candidate_pairs", "components_on_driver"]
+    assert path == ["candidate_pairs", "verify_pairs", "components_on_driver"]
     assert pipe.decisions[0] == ("rep_payload", "broadcast", n_keys, 2 * n_keys)
     pd.testing.assert_frame_equal(a, b)
 
     pipe, path, c = run(broadcast_key_limit=1)
-    assert path == ["candidate_pairs", "connected_components"]
+    assert path == ["candidate_pairs", "verify_pairs", "connected_components"]
     assert pipe.decisions == [
         ("rep_payload", "shuffle", n_keys, 1),
         ("clusters", "star", n_verified, 1),
     ]
     pd.testing.assert_frame_equal(a, c)
+
+    # past the measured verify crossover, the driver's candidates go to
+    # Spark's verify_pairs
+    monkeypatch.setattr(P, "DRIVER_VERIFY_PAIRS", n_verified - 1)
+    pipe, path, d = run()
+    assert path == ["candidate_pairs_on_driver", "verify_pairs", "components_on_driver"]
+    assert pipe.decisions[2] == ("verified", "spark", n_verified, n_verified - 1)
+    pd.testing.assert_frame_equal(a, d)
+
+    # more emitted pairs than the driver budget holds: both stages on Spark
+    monkeypatch.setattr(P, "PAIR_BYTES", 1 << 30)
+    pipe, path, e = run()
+    assert path == [
+        "candidate_pairs_on_driver",
+        "candidate_pairs",
+        "verify_pairs",
+        "components_on_driver",
+    ]
+    assert pipe.decisions[1:3] == [
+        ("candidates", "spark", n_emitted, 1),
+        ("verified", "spark", n_verified, 1),
+    ]
+    assert pipe.rows["verified"] == n_verified
+    pd.testing.assert_frame_equal(a, e)
 
     # the broadcast path's lazy duplicate probe: its error is not lost
     def failing_probe(ids):
